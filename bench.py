@@ -360,12 +360,12 @@ def main() -> None:
         if attempt + 1 >= MIN_PASSES and not (steal_hot or wall_hot):
             break
         if attempt + 1 < MAX_PASSES:
-            why = (
-                f"{s}s host steal ({frac:.1%} of cpu capacity)"
-                if steal_hot
-                else f"wall {wall}s > {WALL_REGRESS_LIMIT}x baseline "
-                f"{base_total:.1f}s"
-            )
+            if steal_hot:
+                why = f"{s}s host steal ({frac:.1%} of cpu capacity)"
+            elif wall_hot:
+                why = f"wall {wall}s > {WALL_REGRESS_LIMIT}x baseline {base_total:.1f}s"
+            else:
+                why = f"MIN_PASSES={MIN_PASSES}"
             print(
                 f"# bench: pass {attempt + 1}: {why} — re-running the "
                 "full pass",
@@ -398,11 +398,13 @@ def main() -> None:
             {"total": p["total"], "steal": p["steal"]} for p in passes
         ],
         "combine": "per-query min across passes",
-        # names only in the summary line; first-run seconds live in the
-        # detail lines + bench_last.json so cross-round consumers can
-        # discount warm-rerun (steady-state) timings
-        "retried": sorted(retried),
-        "queries": timings,
+        # a count only in the summary line; names and first-run seconds
+        # live in the detail lines + bench_last.json so cross-round
+        # consumers can discount warm-rerun (steady-state) timings
+        "retried": len(retried),
+        # 2dp keeps every query inside the driver's fixed-size tail
+        # capture (r03: the line outgrew it and the perf signal was lost)
+        "queries": {k: round(v, 2) for k, v in timings.items()},
     }
     # Full detail (incl. retried first-run timings) to a sidecar file +
     # human-readable lines FIRST, so the driver's fixed-size tail capture
@@ -422,19 +424,7 @@ def main() -> None:
     for name, sec in timings.items():
         flag = " (retried)" if name in retried else ""
         print(f"# {sec:7.3f}s  {name}{flag}")
-    line = json.dumps(doc, separators=(",", ":"))
-    if len(line) > 1750:
-        # keep the parseable payload safely inside the driver's 2000-char
-        # tail capture: drop timing precision before dropping anything else
-        doc["queries"] = {k: round(v, 2) for k, v in timings.items()}
-        line = json.dumps(doc, separators=(",", ":"))
-    if len(line) > 1750:
-        # still too long (many long-named queries): drop the per-query
-        # map from the summary line entirely — full detail already lives
-        # in bench_last.json and the printed per-query lines above
-        doc["queries"] = "see bench_last.json + detail lines"
-        line = json.dumps(doc, separators=(",", ":"))
-    print(line)
+    print(json.dumps(doc, separators=(",", ":")))
     spark.stop()
 
 

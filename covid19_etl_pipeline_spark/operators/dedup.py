@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.operators.partitioning import iteration_barrier, spread
+from covid19_etl_pipeline_spark.operators.partitioning import (
+    BROADCAST_ROW_BOUND,
+    iteration_barrier,
+    spread,
+)
 from covid19_etl_pipeline_spark.operators.text import normalized_text, shingles, tokens
 
 
@@ -555,23 +559,6 @@ def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-#: Edge count under which connected_components pins the label side of
-#: every per-round join as an explicit broadcast (labels are node-sized,
-#: bounded by 2·edges — at this bound a worst-case ~4M-node label frame
-#: builds a ~100 MB relation, comfortable on any driver). Above it the
-#: label joins are hinted shuffled-hash instead: nothing builds on the
-#: driver, no sort, and Catalyst's (unusable — see below) estimates for
-#: post-Arrow stages never get to pick the build side.
-_CC_BROADCAST_EDGE_BOUND = 2_000_000
-
-#: Label-row count under which drop_near_dups broadcasts the cluster
-#: labels into the survivor join ((node, label) longs — ~100 MB built
-#: at the bound, the same driver contract as the CC/pagerank bounds);
-#: above it the join pins shuffled-hash so nothing corpus-shaped ever
-#: builds on the driver.
-_DND_BROADCAST_LABEL_BOUND = 2_000_000
-
-
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -613,7 +600,9 @@ def connected_components(
     # large graphs pin every label-side join to shuffled-hash, which
     # never builds on the driver and skips SMJ's sort. AQE may still
     # convert to broadcast from RUNTIME sizes — those are accurate.
-    small_graph = edges_m.count() <= _CC_BROADCAST_EDGE_BOUND
+    # Labels are node-sized, bounded by 2·edges, so the edge count
+    # sizes the label side.
+    small_graph = edges_m.count() <= BROADCAST_ROW_BOUND
 
     def _label_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_graph else df.hint("shuffle_hash")
@@ -730,10 +719,8 @@ def drop_near_dups(
     lbl = labels.select(
         F.col(node_col).alias("__node"), F.col(label_col).alias("__label")
     )
-    # (node, label) rows are two longs — at the bound the built
-    # relation is ~100 MB, the same driver contract as
-    # graph._PR_BROADCAST_NODE_BOUND documents
-    if labels.count() <= _DND_BROADCAST_LABEL_BOUND:
+    # (node, label) rows are two longs: the BROADCAST_ROW_BOUND contract
+    if labels.count() <= BROADCAST_ROW_BOUND:
         lbl = F.broadcast(lbl)
     else:
         lbl = lbl.hint("shuffle_hash")

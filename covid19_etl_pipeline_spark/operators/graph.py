@@ -20,28 +20,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.operators.partitioning import iteration_barrier
+from covid19_etl_pipeline_spark.operators.partitioning import (
+    BROADCAST_ROW_BOUND,
+    iteration_barrier,
+)
 
-#: Node count under which pagerank pins the rank/contribution side of
-#: every per-round join as an explicit broadcast (both frames are
-#: node-sized; at this bound a worst-case label frame builds a ~100 MB
-#: relation). The aggregated-graph leaves sit on RDD scans whose size
-#: Catalyst cannot estimate, so the static planner falls back to
-#: sort-merge; AQE does convert to broadcast at runtime, but only
-#: AFTER paying each join's exchange — the explicit hint removes the
-#: exchanges outright (measured: 3-iteration nation graph, ~2.1s ->
-#: ~1.3s at sf0.1). Above the bound nothing builds on the driver: the
-#: joins are hinted shuffled-hash, the connected_components convention.
-#: DRIVER-MEMORY CONTRACT (ADVICE r11): at the bound each broadcast is
-#: a ~(node, double) frame — ~100 MB framed, built on the driver once
-#: for out-weights plus once per iteration for ranks/contribs — so a
-#: deployment running pagerank near 2M nodes needs roughly
-#: iterations × 100 MB of transient driver headroom (broadcasts are
-#: GC'd between rounds; ~1-2 GB driver memory is the safe minimum).
-#: Small-driver deployments should LOWER this bound rather than raise
-#: driver memory — above it the plan is shuffled-hash and builds
-#: nothing on the driver.
-_PR_BROADCAST_NODE_BOUND = 2_000_000
+# Under BROADCAST_ROW_BOUND nodes, pagerank pins the rank/contribution
+# side of every per-round join as an explicit broadcast (both frames
+# are node-sized). The aggregated-graph leaves sit on RDD scans whose size
+# Catalyst cannot estimate, so the static planner falls back to
+# sort-merge; AQE does convert to broadcast at runtime, but only
+# AFTER paying each join's exchange — the explicit hint removes the
+# exchanges outright (measured: 3-iteration nation graph, ~2.1s ->
+# ~1.3s at sf0.1). Above the bound nothing builds on the driver: the
+# joins are hinted shuffled-hash, the connected_components convention.
+# DRIVER-MEMORY CONTRACT (ADVICE r11): at the bound each broadcast is
+# a ~(node, double) frame — ~100 MB framed, built on the driver once
+# for out-weights plus once per iteration for ranks/contribs — so a
+# deployment running pagerank near 2M nodes needs roughly
+# iterations × 100 MB of transient driver headroom (broadcasts are
+# GC'd between rounds; ~1-2 GB driver memory is the safe minimum).
 
 
 def pagerank(
@@ -88,8 +86,8 @@ def pagerank(
 
     # Join strategy from the REAL node count (already probed above for
     # the teleport term — zero extra jobs), never Catalyst's estimate:
-    # see _PR_BROADCAST_NODE_BOUND.
-    small_graph = n_nodes <= _PR_BROADCAST_NODE_BOUND
+    # see BROADCAST_ROW_BOUND.
+    small_graph = n_nodes <= BROADCAST_ROW_BOUND
 
     def _node_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_graph else df.hint("shuffle_hash")

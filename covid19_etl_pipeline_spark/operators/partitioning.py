@@ -107,6 +107,18 @@ def bucketed_equi_join(
     return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
 
 
+#: Row count under which the engine broadcasts a frame it sized itself
+#: (a real ``count()``, never Catalyst's estimate, which is unusable over
+#: Arrow and RDD stages); above it the join is hinted shuffled-hash, so
+#: nothing data-scale ever builds on the driver. One bound for every such
+#: join: connected-components and drop_near_dups labels, pagerank nodes,
+#: the frequent-shingle filter. DRIVER-MEMORY CONTRACT: at the bound a
+#: frame of two 8-byte columns builds a ~100 MB relation on the driver.
+#: Small-driver deployments should LOWER this bound rather than raise
+#: driver memory.
+BROADCAST_ROW_BOUND = 2_000_000
+
+
 #: Session conf key: when set to a storage path, iterative operators
 #: (connected components, pagerank, k-means) switch their per-round
 #: lineage barrier from executor-local blocks to the storage-backed

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import dedup
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import spread
+from covid19_etl_pipeline_spark.operators.partitioning import BROADCAST_ROW_BOUND, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 from covid19_etl_pipeline_spark.plans.embedding import embedding_neardup_pairs
@@ -828,7 +828,7 @@ def corpus_duplicate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the join pins shuffled-hash (measured a wash at ×100: min 48.0s
     # shj vs 50.0s bcast). The count's job doubles as the barrier's
     # materializing action, so the filter side computes once either way.
-    if freq.count() <= 2_000_000:
+    if freq.count() <= BROADCAST_ROW_BOUND:
         freq = F.broadcast(freq)
     else:
         freq = freq.hint("shuffle_hash")

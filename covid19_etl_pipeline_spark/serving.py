@@ -18,7 +18,7 @@ reference's DDL defaults (data_loader.py:100 etc.).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid19_etl_pipeline_spark.pipeline import (
@@ -329,59 +329,63 @@ def delete_keys(
     row matching ``keys`` from a partitioned parquet dataset, rewriting
     ONLY the partitions that contain a match.
 
-    Shape: (1) a broadcast semi-join finds the affected partition
-    values (dynamic partition pruning keeps the probe scan
-    partition-local); (2) only those partitions are re-read, the keys
-    anti-joined away, and the survivors land via dynamic partition
-    overwrite — untouched partitions' files are never read or
-    rewritten; (3) partitions whose every row matched are purged
-    directly (dynamic overwrite only replaces partitions present in
-    the written data). The partition-values collect is metadata-scale
-    (bounded by the partition count, never rows). At 100 TB this is
-    the compliance-delete pattern table formats implement natively —
-    here from Spark + filesystem primitives, like publish_versioned.
+    Shape: (1) the distinct keys land behind one barrier and serve both
+    joins below; (2) one partition-scale aggregate left-joins the key
+    and partition columns to the broadcast keys and counts, per hit
+    partition, its rows and its hit rows — at most one collected row
+    per partition, never rows; (3) partially hit partitions are re-read
+    through a null-safe partition predicate, the keys anti-joined away,
+    and the survivors land via dynamic partition overwrite — untouched
+    partitions' files are never rewritten; (4) fully hit partitions
+    (dynamic overwrite only replaces partitions present in the written
+    data) are purged by the directories of the files Spark lists for
+    them, so null (``__HIVE_DEFAULT_PARTITION__``) and escaped partition
+    values are removed as written. At 100 TB this is the
+    compliance-delete pattern table formats implement natively — here
+    from Spark + filesystem primitives, like publish_versioned.
 
     Returns the number of rows deleted.
     """
-    import os
+    import posixpath
     import shutil
+    from functools import reduce
+    from urllib.parse import unquote, urlparse
+
+    from covid19_etl_pipeline_spark.sources.io import overwrite_partitions_dynamic
 
     kc, pc = list(key_cols), list(partition_by)
     tbl = spark.read.parquet(path)
-    keys_d = keys.select(*kc).distinct().localCheckpoint()
-    affected = (
-        tbl.join(F.broadcast(keys_d), kc, "left_semi")
-        .select(*pc)
-        .distinct()
-        .localCheckpoint()
+    keys_d = F.broadcast(keys.select(*kc).distinct().localCheckpoint())
+    per_part = (
+        tbl.select(*kc, *pc)
+        .join(keys_d.withColumn("__hit", F.lit(True)), kc, "left")
+        .groupBy(*pc)
+        .agg(F.count(F.lit(1)).alias("n"), F.count("__hit").alias("n_hit"))
+        .where(F.col("n_hit") > 0)
+        .collect()
     )
-    pruned = tbl.join(F.broadcast(affected), pc, "left_semi")
-    n_before = pruned.count()
-    # the barrier cuts the read->overwrite dependency on `path`
-    remaining = pruned.join(F.broadcast(keys_d), kc, "left_anti").localCheckpoint()
-    n_deleted = n_before - remaining.count()
-    if n_deleted == 0:
-        return 0
-    if remaining.isEmpty():
-        kept_parts: set[tuple] = set()
-    else:
-        from covid19_etl_pipeline_spark.sources.io import (
-            overwrite_partitions_dynamic,
+
+    def in_parts(rows) -> Column:
+        return reduce(
+            lambda a, b: a | b,
+            (reduce(lambda a, b: a & b, (F.col(c).eqNullSafe(r[c]) for c in pc)) for r in rows),
         )
 
+    full = [r for r in per_part if r["n_hit"] == r["n"]]
+    partial = [r for r in per_part if r["n_hit"] < r["n"]]
+    # list before the overwrite: its commit replaces the files `tbl` indexed
+    full_files = (
+        tbl.where(in_parts(full)).select("_metadata.file_path").distinct().collect()
+        if full
+        else []
+    )
+    if partial:
+        # the barrier cuts the read->overwrite dependency on `path`
+        remaining = tbl.where(in_parts(partial)).join(keys_d, kc, "left_anti").localCheckpoint()
         overwrite_partitions_dynamic(remaining, path, pc)
-        kept_parts = {
-            tuple(r[c] for c in pc)
-            for r in remaining.select(*pc).distinct().collect()
-        }
-    for r in affected.collect():
-        part = tuple(r[c] for c in pc)
-        if part not in kept_parts:
-            shutil.rmtree(
-                os.path.join(path, *[f"{c}={v}" for c, v in zip(pc, part)]),
-                ignore_errors=True,
-            )
-    return n_deleted
+    for d in {posixpath.dirname(unquote(urlparse(r[0]).path)) for r in full_files}:
+        shutil.rmtree(d, ignore_errors=True)
+    return sum(r["n_hit"] for r in per_part)
 
 
 def vacuum_versions(name: str, root: str, keep_last: int = 2) -> list[str]:

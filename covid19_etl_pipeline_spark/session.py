@@ -15,6 +15,28 @@ Scale notes (100 TB):
   are reproducible across clusters (and match the DuckDB oracle, which is
   UTC-naive).
 - Arrow enabled for any pandas-UDF extension operators.
+
+Warm worker image: Python-backed tasks (pandas UDFs, and every
+``createDataFrame`` over a local list, which plans as a scan over a
+Python RDD) run in workers forked from ``spark.python.daemon.module``.
+The stock daemon leaves two fixed costs on each task, which dominate
+short serving operations:
+
+- PySpark calls ``importlib.invalidate_caches()`` at the start of every
+  task. On Python < 3.12 that makes each zipimporter over ``pyspark.zip``
+  re-parse the archive's whole central directory: ~130-200 ms per task
+  on a 4-core host, even on a reused worker.
+- The stock daemon pre-imports only ``pyspark.worker``, so every Arrow
+  worker imports pandas, pyarrow and ``pyspark.sql.pandas`` on its first
+  task.
+
+``get_spark`` therefore names :mod:`covid19_etl_pipeline_spark._pyworker`
+as the daemon module; it fixes both once, before any fork. Precondition:
+the daemon must be able to import this package. ``get_spark`` prepends
+the package root to ``spark.executorEnv.PYTHONPATH``, which covers local
+mode; a cluster must ship the package to its executors (``--py-files``
+or an image). Sessions built elsewhere (a vanilla ``SparkSession``) keep
+the stock daemon, and the engine runs unchanged on it.
 """
 
 from __future__ import annotations
@@ -24,6 +46,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "covid19-etl-pipeline-spark"
+
+#: The directory holding this package: the daemon's import root.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_parallelism() -> int:
@@ -49,6 +74,10 @@ def get_spark(
     adaptive execution instead of fixed values.
     """
     cores = _default_parallelism()
+    extra_conf = dict(extra_conf or {})
+    python_path = os.pathsep.join(
+        filter(None, (PACKAGE_ROOT, extra_conf.pop("spark.executorEnv.PYTHONPATH", None)))
+    )
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
@@ -81,6 +110,8 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.executorEnv.PYTHONPATH", python_path)
+        .config("spark.python.daemon.module", "covid19_etl_pipeline_spark._pyworker")
     )
     # local-mode JVM heap (driver == executor here) defaults to 1g,
     # which the 10x scale fixtures overflow; honored only at JVM
@@ -88,7 +119,7 @@ def get_spark(
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if mem:
         builder = builder.config("spark.driver.memory", mem)
-    for key, value in (extra_conf or {}).items():
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()

@@ -158,7 +158,7 @@ def test_connected_components_known_graph(spark):
 
 
 def test_connected_components_large_graph_join_strategy(spark, monkeypatch):
-    """Above _CC_BROADCAST_EDGE_BOUND the per-round label joins switch
+    """Above BROADCAST_ROW_BOUND edges the per-round label joins switch
     from explicit broadcast to shuffled-hash hints (the x100 sweep OOMed
     building a driver broadcast chosen off Catalyst's garbage size
     estimate for post-Arrow stages — a 42.7M-pair GEMM output estimated
@@ -174,7 +174,7 @@ def test_connected_components_large_graph_join_strategy(spark, monkeypatch):
         r["node"]: r["label"]
         for r in D.connected_components(edges, "a", "b").collect()
     }
-    monkeypatch.setattr(D, "_CC_BROADCAST_EDGE_BOUND", 0)
+    monkeypatch.setattr(D, "BROADCAST_ROW_BOUND", 0)
     hashed = {
         r["node"]: r["label"]
         for r in D.connected_components(edges, "a", "b").collect()

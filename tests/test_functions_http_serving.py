@@ -421,7 +421,9 @@ def test_list_versions_metadata(spark, sf_dir, tmp_path):
 
 def test_delete_keys_partition_scoped(spark, tmp_path):
     """Targeted delete rewrites only affected partitions, purges
-    fully-deleted ones, and never touches unaffected files."""
+    fully-deleted ones, and never touches unaffected files — also for
+    null and escaped partition values, and the returned count is the
+    number of rows actually removed."""
     import os
 
     from covid19_etl_pipeline_spark.serving import delete_keys
@@ -431,8 +433,9 @@ def test_delete_keys_partition_scoped(spark, tmp_path):
         # (user_id, region, v)
         (1, "eu", 10), (2, "eu", 20), (3, "us", 30),
         (4, "us", 40), (5, "apac", 50),
+        (6, None, 60), (7, None, 70), (8, "a/b", 80),
     ]
-    df = spark.createDataFrame(rows, ["user_id", "region", "v"])
+    df = spark.createDataFrame(rows, "user_id long, region string, v long")
     df.write.partitionBy("region").parquet(path)
 
     def files(part):
@@ -445,19 +448,30 @@ def test_delete_keys_partition_scoped(spark, tmp_path):
             if f.endswith(".parquet")
         )
 
+    def user_ids():
+        return {r["user_id"] for r in spark.read.parquet(path).collect()}
+
     us_before = files("us")
-    # delete user 1 (partial partition eu) and user 5 (ALL of apac)
-    keys = spark.createDataFrame([(1,), (5,)], ["user_id"])
+    assert files("a%2Fb") is not None  # 'a/b' lands escaped
+    # user 1: partial eu; user 5: ALL of apac; user 6: partial NULL
+    # region; user 8: ALL of the escaped 'a/b' region
+    keys = spark.createDataFrame([(1,), (5,), (6,), (8,)], "user_id long")
     n = delete_keys(spark, path, keys, ("user_id",), ("region",))
-    assert n == 2
-    left = spark.read.parquet(path)
-    assert {r["user_id"] for r in left.collect()} == {2, 3, 4}
+    assert user_ids() == {2, 3, 4, 7}
+    assert n == len(rows) - len(user_ids()) == 4  # the rows actually removed
     # untouched partition: identical files, identical mtimes
     assert files("us") == us_before
-    # fully-deleted partition directory purged
+    # fully-deleted partition directories purged, escaped one included
     assert files("apac") is None
+    assert files("a%2Fb") is None
+    # the last row of the NULL region: that partition is purged too
+    keys7 = spark.createDataFrame([(7,)], "user_id long")
+    assert delete_keys(spark, path, keys7, ("user_id",), ("region",)) == 1
+    assert user_ids() == {2, 3, 4}
+    assert files("__HIVE_DEFAULT_PARTITION__") is None
     # idempotent: nothing left to delete
     assert delete_keys(spark, path, keys, ("user_id",), ("region",)) == 0
+    assert files("us") == us_before
 
 
 def test_vacuum_versions_keeps_current_and_newest(spark, tmp_path):
