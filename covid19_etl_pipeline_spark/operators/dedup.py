@@ -25,11 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.operators.partitioning import (
-    BROADCAST_ROW_BOUND,
-    iteration_barrier,
-    spread,
-)
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, join_side, spread
 from covid19_etl_pipeline_spark.operators.text import normalized_text, shingles, tokens
 
 
@@ -253,7 +249,7 @@ def jaccard_pairs(
             F.col(id_col),
             F.array_distinct(shingles(tokens(text_col), k=shingle_k)).alias("sh"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     out = (
         candidates.join(sets.withColumnRenamed(id_col, f"{id_col}_a"), on=f"{id_col}_a")
@@ -336,7 +332,7 @@ def prefix_filter_jaccard_pairs(
                 F.transform(shingles(tokens(text_col), k=shingle_k), lambda s: F.xxhash64(s))
             ).alias("sh"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     # carry the set size through the explode — saves a join back to sets
     ex = sets.select(F.col(id_col), F.size("sh").alias("sz"), F.explode("sh").alias("s"))
@@ -369,12 +365,9 @@ def prefix_filter_jaccard_pairs(
         # ×10. Lazy additionally folds the materialization into the
         # first consuming job (one scheduler round-trip fewer). At
         # 100 TB the blocks land on executor storage either way — the
-        # one-materialization-vs-two-passes trade is unchanged. Routed
-        # through iteration_barrier (ADVICE r11) so the engine-wide
-        # CHECKPOINT_DIR_CONF toggle flips this barrier to a reliable
-        # storage-backed checkpoint with the rest of the engine.
+        # one-materialization-vs-two-passes trade is unchanged.
     )
-    prefix = iteration_barrier(prefix, eager=False)
+    prefix = barrier(prefix)
     a, b = prefix.alias("a"), prefix.alias("b")
     # PPJoin positional filter: Jaccard >= t forces an overlap of at
     # least alpha = t/(1+t)·(|A|+|B|). The rarity order is GLOBAL, so
@@ -476,7 +469,7 @@ def containment_pairs(
                 F.transform(shingles(tokens(text_col), k=shingle_k), lambda s: F.xxhash64(s))
             ).alias("sh"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     ex = sets.select(F.col(id_col), F.size("sh").alias("sz"), F.explode("sh").alias("s"))
     freq = ex.groupBy("s").agg(F.count("*").alias("df_cnt"))
@@ -574,19 +567,19 @@ def connected_components(
     Genuinely iterative (no closed SQL form at scale): the driver loop
     only CONTROLS iteration — each round is one distributed
     join+groupBy, converging in O(graph diameter) rounds (dup clusters
-    are near-cliques, so typically 2-3). ``iteration_barrier`` cuts the
+    are near-cliques, so typically 2-3). ``barrier`` cuts the
     exponential lineage per round; setting
-    ``partitioning.CHECKPOINT_DIR_CONF`` on the session flips every
-    barrier to the storage-backed ``reliable_checkpoint`` for cluster
-    deployments (identical labels either mode — tested).
+    ``partitioning.CHECKPOINT_DIR_CONF`` on the session makes every
+    barrier storage-backed for cluster deployments (identical labels
+    either mode — tested).
 
     Returns (node, label) with label = min node id of the component.
     """
     # the caller's edge list (often a whole LSH pipeline) is consumed
     # by BOTH direction-selects below — materialize it once, or the
     # candidate-generation subtree executes 2x (and 4x through adj).
-    edges_m = iteration_barrier(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    edges_m = barrier(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")), eager=True
     )
     # Join strategy from the REAL edge count, not Catalyst's estimate:
     # candidate generators are Arrow/mapInPandas stages whose output
@@ -595,17 +588,9 @@ def connected_components(
     # broadcasts a data-scale frame and the driver dies building it
     # (x100 sweep: `Not enough memory to build and broadcast`). The
     # eager barrier above just materialized the blocks, so count() is
-    # one cheap job. Small graphs keep the explicit-broadcast plan
-    # (per-round label frames are node-sized — strictly smaller);
-    # large graphs pin every label-side join to shuffled-hash, which
-    # never builds on the driver and skips SMJ's sort. AQE may still
-    # convert to broadcast from RUNTIME sizes — those are accurate.
-    # Labels are node-sized, bounded by 2·edges, so the edge count
-    # sizes the label side.
-    small_graph = edges_m.count() <= BROADCAST_ROW_BOUND
-
-    def _label_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df.hint("shuffle_hash")
+    # one cheap job. Labels are node-sized, bounded by 2·edges, so the
+    # edge count sizes every label-side join_side.
+    n_edges = edges_m.count()
 
     # no distinct on the bidirectional list: candidate generators emit
     # (a < b) pairs already distinct, and reversing cannot create dups;
@@ -625,9 +610,8 @@ def connected_components(
     # labels job below instead of costing a scheduler round-trip of
     # their own — only edges_m needs the EAGER barrier (it guards the
     # caller's candidate-generation subtree from re-execution).
-    adj = iteration_barrier(
-        bi.union(nodes.select(F.col("node").alias("s"), F.col("node").alias("d"))),
-        eager=False,
+    adj = barrier(
+        bi.union(nodes.select(F.col("node").alias("s"), F.col("node").alias("d")))
     )
     # round 0 fused: with identity starting labels, the first
     # neighborhood-min is just min(s) per d over adj (the self-loop
@@ -648,23 +632,22 @@ def connected_components(
     # job — no extra action, the cost the fusion trades away from the
     # common case. Labels stay monotone, so the sum probe is unchanged.
     nbr0 = (
-        adj.join(_label_side(labels0), adj["s"] == labels0["node"])
+        adj.join(join_side(labels0, n_edges), adj["s"] == labels0["node"])
         .groupBy(F.col("d").alias("node"))
         .agg(F.min("label").alias("label"))
     )
     par0 = labels0.select(
         F.col("node").alias("pnode"), F.col("label").alias("plabel")
     )
-    labels = iteration_barrier(
-        nbr0.join(_label_side(par0), nbr0["label"] == par0["pnode"]).select(
+    labels = barrier(
+        nbr0.join(join_side(par0, n_edges), nbr0["label"] == par0["pnode"]).select(
             "node", F.least("label", "plabel").alias("label")
-        ),
-        eager=False,
+        )
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(max_iter):
         nbr_min = (
-            adj.join(_label_side(labels), adj["s"] == labels["node"])
+            adj.join(join_side(labels, n_edges), adj["s"] == labels["node"])
             .groupBy(F.col("d").alias("node"))
             .agg(F.min("label").alias("label"))
         )
@@ -683,10 +666,10 @@ def connected_components(
         parent = labels.select(
             F.col("node").alias("pnode"), F.col("label").alias("plabel")
         )
-        labels = iteration_barrier(
-            nbr_min.join(_label_side(parent), nbr_min["label"] == parent["pnode"])
-            .select("node", F.least("label", "plabel").alias("label")),
-            eager=False,
+        labels = barrier(
+            nbr_min.join(
+                join_side(parent, n_edges), nbr_min["label"] == parent["pnode"]
+            ).select("node", F.least("label", "plabel").alias("label"))
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
@@ -706,24 +689,25 @@ def drop_near_dups(
     the min-id representative of each cluster (``labels`` from
     ``connected_components``). Left join + filter — one join whose
     strategy is picked from the REAL label count (r12, guide §3.1):
-    ``labels`` sits behind connected_components' iteration barriers,
-    so Catalyst cannot size it and static planning falls back to
-    sort-merge — TWO exchanges plus sorts, one of them over the whole
-    corpus side (the r12 training_corpus before-plan). The barrier's
-    blocks are already materialized by CC's convergence probe, so
-    ``count()`` is one cheap cached-scan job; under the bound the
-    labels side broadcasts (corpus side never shuffles), above it the
-    join pins shuffled-hash — never an estimate-picked build, the r08
+    ``labels`` sits behind connected_components' barriers, so Catalyst
+    cannot size it and static planning falls back to sort-merge — TWO
+    exchanges plus sorts, one of them over the whole corpus side (the
+    r12 training_corpus before-plan). ``join_side`` broadcasts the
+    labels under the bound (corpus side never shuffles) and pins
+    shuffled-hash above it — never an estimate-picked build, the r08
     lesson.
+
+    PRECONDITION: ``labels`` must already sit behind a MATERIALIZED
+    ``barrier`` — connected_components' output does, its convergence
+    probe ran the last one. The label count runs a job while this frame
+    is built; over an unmaterialized ``labels`` that job runs the whole
+    labels lineage, and the final action runs it again.
     """
     lbl = labels.select(
         F.col(node_col).alias("__node"), F.col(label_col).alias("__label")
     )
     # (node, label) rows are two longs: the BROADCAST_ROW_BOUND contract
-    if labels.count() <= BROADCAST_ROW_BOUND:
-        lbl = F.broadcast(lbl)
-    else:
-        lbl = lbl.hint("shuffle_hash")
+    lbl = join_side(lbl, labels.count())
     return (
         df.join(lbl, df[id_col] == F.col("__node"), "left")
         .filter(F.col("__node").isNull() | (F.col("__node") == F.col("__label")))

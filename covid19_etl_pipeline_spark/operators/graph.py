@@ -10,7 +10,7 @@ and ``similarity.lloyd_iterations``).
 At scale: the expensive pass is building/aggregating the edge list from
 the fact data (one keyed shuffle); iterations then run on the
 aggregated graph, shuffling only (dst, contribution) pairs per round.
-``iteration_barrier`` per round cuts the lineage chain so plan size
+``partitioning.barrier`` per round cuts the lineage chain so plan size
 stays constant in the iteration count (storage-backed barriers via
 ``partitioning.CHECKPOINT_DIR_CONF`` on clusters).
 """
@@ -20,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.operators.partitioning import (
-    BROADCAST_ROW_BOUND,
-    iteration_barrier,
-)
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, join_side
 
 # Under BROADCAST_ROW_BOUND nodes, pagerank pins the rank/contribution
 # side of every per-round join as an explicit broadcast (both frames
@@ -32,9 +29,8 @@ from covid19_etl_pipeline_spark.operators.partitioning import (
 # sort-merge; AQE does convert to broadcast at runtime, but only
 # AFTER paying each join's exchange — the explicit hint removes the
 # exchanges outright (measured: 3-iteration nation graph, ~2.1s ->
-# ~1.3s at sf0.1). Above the bound nothing builds on the driver: the
-# joins are hinted shuffled-hash, the connected_components convention.
-# DRIVER-MEMORY CONTRACT (ADVICE r11): at the bound each broadcast is
+# ~1.3s at sf0.1). Above the bound the joins are hinted shuffled-hash
+# (``join_side``). DRIVER-MEMORY CONTRACT (ADVICE r11): at the bound each broadcast is
 # a ~(node, double) frame — ~100 MB framed, built on the driver once
 # for out-weights plus once per iteration for ranks/contribs — so a
 # deployment running pagerank near 2M nodes needs roughly
@@ -71,27 +67,22 @@ def pagerank(
     # barrier the fact pass re-executes once per consumer (measured
     # 2× on nation_trade_pagerank). Everything downstream reads the
     # aggregated-graph-sized blocks.
-    e = iteration_barrier(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
+    e = barrier(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")),
+        eager=True,
     )
     # lazy: the count() right after is the action that materializes the
     # nodes blocks — no separate scheduler round-trip for the barrier
-    nodes = iteration_barrier(
+    nodes = barrier(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
     n_nodes = nodes.count()
 
     # Join strategy from the REAL node count (already probed above for
     # the teleport term — zero extra jobs), never Catalyst's estimate:
-    # see BROADCAST_ROW_BOUND.
-    small_graph = n_nodes <= BROADCAST_ROW_BOUND
-
-    def _node_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df.hint("shuffle_hash")
-
+    # see join_side.
     # round(1-d) before dividing: binary-float 1.0-0.85 is 1 ulp off the
     # 0.15 literal a SQL oracle folds to — pin both to the same double
     teleport = round(1.0 - damping, 12) / n_nodes
@@ -99,22 +90,23 @@ def pagerank(
     # transition matrix rows: contribution fraction per edge. Lazy:
     # the unrolled power iteration references trans as ONE shared
     # subplan, so its blocks materialize inside the final job.
-    trans = iteration_barrier(
-        e.join(_node_side(out_w), "src").select(
+    trans = barrier(
+        e.join(join_side(out_w, n_nodes), "src").select(
             "src", "dst", (F.col("w") / F.col("ow")).alias("p")
-        ),
-        eager=False,
+        )
     )
 
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
     for i in range(iterations):
         contrib = (
-            trans.join(_node_side(ranks), trans.src == ranks.node)
+            trans.join(join_side(ranks, n_nodes), trans.src == ranks.node)
             .select("dst", (F.col("p") * F.col("r")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = nodes.join(_node_side(contrib), nodes.node == contrib.dst, "left").select(
+        ranks = nodes.join(
+            join_side(contrib, n_nodes), nodes.node == contrib.dst, "left"
+        ).select(
             "node",
             F.round(
                 F.lit(teleport)
@@ -128,7 +120,7 @@ def pagerank(
         # needed. Only cut lineage periodically so deep iteration counts
         # don't blow up the optimizer or the task-closure size.
         if (i + 1) % 4 == 0 and (i + 1) < iterations:
-            ranks = iteration_barrier(ranks)
+            ranks = barrier(ranks, eager=True)
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -195,16 +187,15 @@ def relax_rounds(
     engines or partitionings. Each round is one join + one min-agg on
     the edge list; unreachable-within-k nodes are absent.
     """
-    e = iteration_barrier(
+    e = barrier(
         edges.select(
             F.col(src).alias("s"),
             F.col(dst).alias("d"),
             F.col(weight).cast("double").alias("w"),
-        )
+        ),
+        eager=True,
     )
-    dist = iteration_barrier(
-        sources.select(F.col("node"), F.lit(0.0).alias("cost"))
-    )
+    dist = barrier(sources.select(F.col("node"), F.lit(0.0).alias("cost")), eager=True)
     for _ in range(rounds):
         step = e.join(dist, e["s"] == dist["node"]).select(
             F.col("d").alias("node"),
@@ -213,9 +204,8 @@ def relax_rounds(
         # lazy: rounds are FIXED (no probe), so the whole unrolled
         # chain materializes in the caller's single action; each round's
         # dist is one shared RDD for its two references (join + union)
-        dist = iteration_barrier(
-            step.union(dist).groupBy("node").agg(F.min("cost").alias("cost")),
-            eager=False,
+        dist = barrier(
+            step.union(dist).groupBy("node").agg(F.min("cost").alias("cost"))
         )
     return dist
 
@@ -245,22 +235,19 @@ def bfs_hops(
     Unreachable nodes are absent (the relational BFS convention — a
     LEFT join against the full node set recovers them as NULL).
     """
-    e = iteration_barrier(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    )
-    dist = iteration_barrier(sources.select(F.col("node"), F.lit(0).alias("hops")))
+    e = barrier(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")), eager=True)
+    dist = barrier(sources.select(F.col("node"), F.lit(0).alias("hops")), eager=True)
     prev_state = None
     for _ in range(max_iter):
         # lazy: the convergence probe right after is the action that
         # materializes the round's blocks — one scheduler round-trip
         # per round instead of two
-        relaxed = iteration_barrier(
+        relaxed = barrier(
             e.join(dist, e["s"] == dist["node"])
             .select(F.col("d").alias("node"), (F.col("hops") + 1).alias("hops"))
             .union(dist)
             .groupBy("node")
-            .agg(F.min("hops").alias("hops")),
-            eager=False,
+            .agg(F.min("hops").alias("hops"))
         )
         row = relaxed.agg(
             F.count("*").alias("n"), F.sum("hops").alias("s")
@@ -315,15 +302,14 @@ def label_propagation(
     sym = e0.unionByName(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"), F.col("w"))
     )
-    e = iteration_barrier(
+    e = barrier(
         sym.filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
+        .agg(F.sum("w").alias("w")),
+        eager=True,
     )
     nodes = e.select(F.col("a").alias("node")).distinct()
-    labels = iteration_barrier(
-        nodes.select("node", F.col("node").alias("lbl"))
-    )
+    labels = barrier(nodes.select("node", F.col("node").alias("lbl")), eager=True)
     wv = Window.partitionBy("a").orderBy(F.col("s").desc(), F.col("lbl"))
     for _ in range(iterations):
         best = (
@@ -337,9 +323,8 @@ def label_propagation(
         # lazy: fixed rounds, no probe — the final action materializes
         # the chain; the checkpoint still dedups the label table's two
         # references per round (same RDD identity)
-        labels = iteration_barrier(
+        labels = barrier(
             labels.join(best, labels["node"] == best["bn"], "left")
-            .select("node", F.coalesce("new_lbl", "lbl").alias("lbl")),
-            eager=False,
+            .select("node", F.coalesce("new_lbl", "lbl").alias("lbl"))
         )
     return labels

@@ -1,4 +1,7 @@
-"""Physical-layout operators: parallelism spreading and skew handling.
+"""Physical-layout operators: parallelism spreading and skew handling,
+plus one helper per physical decision the engine steers by hand —
+``barrier`` (every lineage cut) and ``join_side`` (every join strategy
+picked from a real row count).
 
 Scale rationale (SURVEY §7.4, BASELINE north star):
 
@@ -111,54 +114,51 @@ def bucketed_equi_join(
 #: (a real ``count()``, never Catalyst's estimate, which is unusable over
 #: Arrow and RDD stages); above it the join is hinted shuffled-hash, so
 #: nothing data-scale ever builds on the driver. One bound for every such
-#: join: connected-components and drop_near_dups labels, pagerank nodes,
-#: the frequent-shingle filter. DRIVER-MEMORY CONTRACT: at the bound a
-#: frame of two 8-byte columns builds a ~100 MB relation on the driver.
-#: Small-driver deployments should LOWER this bound rather than raise
-#: driver memory.
+#: join, all through :func:`join_side`: connected-components and
+#: drop_near_dups labels, pagerank nodes, the frequent-shingle filter.
+#: DRIVER-MEMORY CONTRACT: at the bound a frame of two 8-byte columns
+#: builds a ~100 MB relation on the driver. Small-driver deployments
+#: should LOWER this bound rather than raise driver memory.
 BROADCAST_ROW_BOUND = 2_000_000
 
 
-#: Session conf key: when set to a storage path, iterative operators
-#: (connected components, pagerank, k-means) switch their per-round
-#: lineage barrier from executor-local blocks to the storage-backed
-#: checkpoint — the production setting for long multi-round jobs where
-#: an executor loss must not restart the iteration from round 0.
+def join_side(df: DataFrame, n_rows: int) -> DataFrame:
+    """The build side of a join whose strategy is picked from ``df``'s
+    REAL row count ``n_rows``: an explicit broadcast at or under
+    ``BROADCAST_ROW_BOUND``, else a shuffled-hash hint, which never
+    builds on the driver and skips sort-merge's sort. AQE may still
+    convert to broadcast from runtime sizes — those are accurate."""
+    return F.broadcast(df) if n_rows <= BROADCAST_ROW_BOUND else df.hint("shuffle_hash")
+
+
+#: Session conf key: when set to a storage path, every :func:`barrier`
+#: in the engine writes a storage-backed checkpoint there instead of
+#: executor-local blocks — the production setting for long jobs where
+#: an executor loss must not restart the work from scratch.
 CHECKPOINT_DIR_CONF = "spark.covid19_etl_pipeline.checkpoint.dir"
 
 
-def iteration_barrier(df: DataFrame, eager: bool = True) -> DataFrame:
-    """The per-round barrier used by every iterative operator.
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage — the engine's only lineage cut; no other
+    module calls ``localCheckpoint`` or ``checkpoint``.
 
     Default: ``localCheckpoint`` (executor-block storage — fast, fine
-    on local[n], lost with an executor). When ``CHECKPOINT_DIR_CONF``
-    is set on the session, routes to :func:`reliable_checkpoint`
-    instead, so ONE config line flips the whole engine's iterative
-    surface to fault-tolerant barriers; results are identical either
-    way (the toggle is physical, verified by test).
+    on local[n], lost with an executor), lazy unless ``eager``: a lazy
+    barrier materializes inside the first action that reads it. When
+    ``CHECKPOINT_DIR_CONF`` is set on the session, the cut is a
+    storage-backed checkpoint in that dir (HDFS/object storage in
+    production), which truncates lineage AND survives executor loss.
+    Storage-backed mode is always eager: a lazy reliable checkpoint
+    recomputes its input. Results are identical either way (the
+    setting is physical, verified by test).
     """
     ckpt_dir = df.sparkSession.conf.get(CHECKPOINT_DIR_CONF, "")
-    if ckpt_dir:
-        return reliable_checkpoint(df, ckpt_dir)
-    return df.localCheckpoint(eager=eager)
-
-
-def reliable_checkpoint(df: DataFrame, checkpoint_dir: str) -> DataFrame:
-    """Reliable (storage-backed) checkpoint — the production form of
-    the ``localCheckpoint`` barriers used throughout the iterative
-    operators (connected components, pagerank, BFS, k-means).
-
-    ``localCheckpoint`` stores blocks on executors: fast, but lost with
-    an executor — fine on local[n], wrong for a 10-hour 1000-executor
-    job. This sets the SparkContext checkpoint dir (HDFS/object storage
-    in production) and materializes ``df`` there, truncating lineage
-    AND surviving executor loss; an iterative caller passes
-    ``barrier=lambda d: reliable_checkpoint(d, dir)`` where it would
-    use ``DataFrame.localCheckpoint``.
-    """
+    if not ckpt_dir:
+        return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None or not str(sc.getCheckpointDir()).startswith(
-        checkpoint_dir.rstrip("/")
-    ):
-        sc.setCheckpointDir(checkpoint_dir)
+    # Spark checkpoints into a fresh ``<dir>/<uuid>`` (qualified, e.g.
+    # ``file:/...``) per setCheckpointDir: re-set only on a new dir
+    current = sc.getCheckpointDir()
+    if current is None or not current.rsplit("/", 1)[0].endswith(ckpt_dir.rstrip("/")):
+        sc.setCheckpointDir(ckpt_dir)
     return df.checkpoint(eager=True)

@@ -38,7 +38,7 @@ import struct
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.operators.partitioning import iteration_barrier, spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -818,15 +818,14 @@ def lloyd_iterations(
     # linearly and short runs compile into a single job — only cut
     # lineage periodically so deep iteration counts don't blow up the
     # optimizer.
-    pts = iteration_barrier(
+    # lazy: Lloyd has no convergence probe, so the caller's single
+    # action materializes the whole unrolled iteration; all round
+    # assignments share the one checkpointed RDD either way
+    pts = barrier(
         emb.select(
             F.col(id_col).alias("pid"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        ),
-        # lazy: Lloyd has no convergence probe, so the caller's single
-        # action materializes the whole unrolled iteration; all round
-        # assignments share the one checkpointed RDD either way
-        eager=False,
+        )
     )
     cent = pts.filter(F.col("pid") < k).select(
         F.col("pid").alias("cid"),
@@ -847,7 +846,7 @@ def lloyd_iterations(
             )
         )
         if (i + 1) % 4 == 0 and (i + 1) < iters:
-            cent = iteration_barrier(cent)
+            cent = barrier(cent, eager=True)
     return _nearest_centroid(pts, cent, keep_dist=True), cent
 
 
@@ -925,7 +924,7 @@ def semdedup_survivors(
         assigned = _nearest_centroid_two_level(pts, cent, k=k, probes=probes)
     else:
         assigned = _nearest_centroid(pts, cent)
-    assigned = assigned.localCheckpoint(eager=False)
+    assigned = barrier(assigned)
     unit = assigned.filter(dot(F.col("v"), F.col("v")) > 0).select(
         "pid",
         "cid",

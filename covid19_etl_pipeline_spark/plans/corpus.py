@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import dedup
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 from covid19_etl_pipeline_spark.plans._shared import (
@@ -133,9 +133,7 @@ def training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate job. distinct=False: a pair repeated per shared band is
     # absorbed by the components' min-aggregate, so the pairs-dedup
     # shuffle is pure overhead in this composition.
-    docs1 = dedup.drop_exact_dups(qual, "doc_id", "__ntext").localCheckpoint(
-        eager=False
-    )
+    docs1 = dedup.drop_exact_dups(qual, "doc_id", "__ntext").transform(barrier)
     pairs = dedup.lsh_candidate_pairs(docs1, "doc_id", "text", distinct=False)
     labels = dedup.connected_components(pairs, "doc_id_a", "doc_id_b")
     survivors = dedup.drop_near_dups(docs1, "doc_id", labels)
@@ -1177,7 +1175,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % 64
             ).alias("b"),
         )
-        .localCheckpoint(eager=False)  # both passes read the bucket stream
+        .transform(barrier)  # both passes read the bucket stream
     )
     bc = tb.groupBy("b").agg(
         F.count(F.when(F.col("lang") == "en", 1)).alias("n_t"),
@@ -1208,7 +1206,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # doc-grain = tiny blocks; consistent ~0.05-0.15s win at sf0.1
         # (interleaved A/B, min 1.27->1.22), and at 100 TB it removes a
         # full second pass over the token stream
-        .localCheckpoint(eager=True)
+        .transform(barrier, eager=True)
     )
     thr = per_doc.agg(F.percentile(F.col("li"), 0.8).alias("q"))
     return (
@@ -1288,7 +1286,7 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select("source", F.explode(text.tokens("text")).alias("t0")).select(
         "source", F.lower("t0").alias("t")
     )
-    vocab = tok.groupBy("t").agg(F.count("*").alias("cnt")).localCheckpoint(eager=False)
+    vocab = tok.groupBy("t").agg(F.count("*").alias("cnt")).transform(barrier)
     total = vocab.agg(F.sum("cnt").alias("n"))
     scored = (
         tok.join(F.broadcast(vocab), "t")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import dedup
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import BROADCAST_ROW_BOUND, spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, join_side, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 from covid19_etl_pipeline_spark.plans.embedding import embedding_neardup_pairs
@@ -413,7 +413,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # EAGER: the blocked self-join below reads this twice (a/b) and
         # a lazy barrier's sibling map stages race and recompute the
         # whole minhash pipeline (the prefix_filter lesson)
-        .localCheckpoint(eager=True)
+        .transform(barrier, eager=True)
     )
     pairs = (
         sigs.alias("a")
@@ -433,7 +433,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumed twice (the exact-Jaccard verify's candidate list AND
         # the estimate side of the final join) — eager for the same
         # sibling-race reason; pair-grain, tiny blocks
-        .localCheckpoint(eager=True)
+        .transform(barrier, eager=True)
     )
     exact = dedup.jaccard_pairs(
         docs, "doc_id", candidates=pairs.select("doc_id_a", "doc_id_b")
@@ -490,7 +490,7 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_eval"
         ),
         F.array_distinct(text.shingles(text.tokens("text"))).alias("sh"),
-    ).localCheckpoint(eager=False)  # shingle sets feed BOTH the eval and train branches
+    ).transform(barrier)  # shingle sets feed BOTH the eval and train branches
     ev = base.filter("is_eval").select(
         F.col("doc_id").alias("eval_id"), F.explode("sh").alias("g")
     )
@@ -646,7 +646,7 @@ def lsh_banding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tblk"),
             F.array_distinct(text.shingles(text.tokens("text"))).alias("shd"),
         )
-        .localCheckpoint(eager=False)  # feeds both truth-join sides
+        .transform(barrier)  # feeds both truth-join sides
     )
     a = sets.select(
         F.col("doc_id").alias("doc_id_a"), "source", "tblk",
@@ -738,7 +738,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = (
         dedup.simhash(docs, "doc_id", bits=32)
         .join(docs.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     a = sig.select(
         F.col("doc_id").alias("doc_id_a"), "source", F.col("simhash").alias("sig_a")
@@ -809,7 +809,7 @@ def corpus_duplicate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-back) within ONE action — lazy, both consumers share the RDD
     ex = sh.select(
         "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("g")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     freq = (
         # per-doc shingles are array_distinct'd, so (doc_id, g) rows are
         # unique and the document frequency is a plain count — the
@@ -818,7 +818,7 @@ def corpus_duplicate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") >= 4)
         .select("g")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     # Join strategy from the REAL frequent-shingle count (r12, the r08
     # rule): the df>=4 set grows with corpus vocabulary — 3.76M shingles
@@ -828,10 +828,7 @@ def corpus_duplicate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the join pins shuffled-hash (measured a wash at ×100: min 48.0s
     # shj vs 50.0s bcast). The count's job doubles as the barrier's
     # materializing action, so the filter side computes once either way.
-    if freq.count() <= BROADCAST_ROW_BOUND:
-        freq = F.broadcast(freq)
-    else:
-        freq = freq.hint("shuffle_hash")
+    freq = join_side(freq, freq.count())
     return (
         ex.join(freq, "g")
         .groupBy("doc_id", "n_sh")
@@ -1062,7 +1059,7 @@ def incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     vs_old_dup = newfp.join(oldfp, "fp", "left_semi").select("doc_id")
-    exdup = vs_old_dup.union(internal_dup).distinct().localCheckpoint(eager=False)
+    exdup = vs_old_dup.union(internal_dup).distinct().transform(barrier)
     exsurv = new.select("doc_id").join(exdup, "doc_id", "left_anti")
     # --- near stage: batch band signatures probe the band index.
     # The index covers old docs + batch exact-survivors; at scale the
@@ -1403,7 +1400,7 @@ def source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", F.explode(sh).alias("sh"))
         .groupBy("sh")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     counts = (
         per_sh.select(F.explode("srcs").alias("source"))
@@ -1534,7 +1531,7 @@ def fuzzy_part_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.element_at(F.split("p_name", " "), 2), F.lit("")).alias(
             "noun"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     # name vocabulary per block — the grain the Levenshtein verify
     # runs at (vocabulary² per block, ~10³ comparisons)
     grp = base.select("noun", "p_brand", "p_name").distinct()
@@ -1854,7 +1851,7 @@ def maximal_repeated_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.col("u.pos").alias("pos"), F.col("u.gh").alias("gh"))
     # consumed twice (dup-gram table + position probe): lazy barrier so
     # the tokenize+explode runs once per action, not per consumer
-    g = g.localCheckpoint(eager=False)
+    g = barrier(g)
     dup = (
         g.groupBy("gh").agg(F.count("*").alias("cnt")).filter(F.col("cnt") > 1)
     ).select("gh")
@@ -2066,7 +2063,7 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = dedup.prefix_filter_jaccard_pairs(
         docs, "doc_id", text_col="text", threshold=0.3
-    ).localCheckpoint(eager=False)  # one pair pass feeds both rollups
+    ).transform(barrier)  # one pair pass feeds both rollups
     thrs = [0.3, 0.4, 0.5, 0.6, 0.7, 0.8]
     # Bucket-and-accumulate instead of exploding the pair stream 6×
     # and running a per-threshold countDistinct (whose Expand doubled

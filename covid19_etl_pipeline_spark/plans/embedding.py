@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import similarity
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -141,7 +141,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "__v", lambda x: x / F.sqrt(similarity.dot(F.col("__v"), F.col("__v")))
             ).alias("uv"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     pairs = similarity.gemm_threshold_pairs(
         unit, threshold=0.35, vec_col="uv", label_col="label"
@@ -221,7 +221,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sims.withColumn("rn", F.row_number().over(w_assign))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", "v")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     q = members.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -590,7 +590,7 @@ def ivf_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("csim", similarity.cosine(F.col("v"), F.col("cv")))
         .withColumn("rn", F.row_number().over(w_assign))
         .select("vec_id", "cid", "rn")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     members = (
         ranked.filter(F.col("rn") == 1)
@@ -1116,7 +1116,7 @@ def embedding_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("i", "c"))).alias("ic"))
         .select("label", F.col("ic.c").alias("cv"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     d2 = (
         similarity.dot(F.col("v"), F.col("v"))
@@ -1362,7 +1362,7 @@ def embedding_outlier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pid").alias("cid"),
         F.transform("v", lambda x: F.round(x, 6)).alias("cv"),
     )
-    assigned = similarity._nearest_centroid(pts, cent, keep_dist=True).localCheckpoint(eager=False)
+    assigned = barrier(similarity._nearest_centroid(pts, cent, keep_dist=True))
     cut = assigned.agg(F.round(F.percentile("d2", F.lit(0.95)), 6).alias("p95"))
     return (
         assigned.crossJoin(F.broadcast(cut))
@@ -1451,13 +1451,13 @@ def embedding_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE assignment artifact feeds the gate, the pair join (both
     # sides) and the sampling window — materialize it once.
-    assigned = similarity._nearest_centroid(pts, cent, keep_dist=True).localCheckpoint(eager=False)
+    assigned = barrier(similarity._nearest_centroid(pts, cent, keep_dist=True))
     cut = assigned.agg(F.round(F.percentile("d2", F.lit(0.95)), 6).alias("p95"))
     inl = (
         assigned.crossJoin(F.broadcast(cut))
         .filter(F.col("d2") <= F.col("p95"))
         .select("pid", "label", "cid", "v")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     unit = inl.filter(similarity.dot(F.col("v"), F.col("v")) > 0).select(
         "pid",
@@ -1561,7 +1561,7 @@ def incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the persisted assignment artifact: old rows come from state, new
     # rows assign map-side against the broadcast quantizer — one
     # materialization feeds the probe joins and the verdict join.
-    assigned = similarity._nearest_centroid(pts, cent).localCheckpoint(eager=False)
+    assigned = similarity._nearest_centroid(pts, cent).transform(barrier)
     unit = assigned.filter(similarity.dot(F.col("v"), F.col("v")) > 0).select(
         "pid",
         "cid",
@@ -1825,7 +1825,7 @@ def eval_embedding_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: x / F.sqrt(similarity.dot(F.col("__v"), F.col("__v"))),
             ).alias("uv"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     corpus = unit.filter(F.col("vec_id") % 50 != 0)
     queries = unit.filter(F.col("vec_id") % 50 == 0)
@@ -1900,7 +1900,7 @@ def mutual_nearest_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = emb.select(
         "vec_id", F.transform(e, lambda x: x / norm).alias("nv")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     # LAZY, kept after an interleaved eager-vs-lazy A/B at the ×100
     # fixture (r12): eager 287/311s vs lazy 236/259s — unlike the r11
     # prefix-table case, the x/y reciprocity self-join's sibling map
@@ -1909,9 +1909,7 @@ def mutual_nearest_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each block once, the second requester blocking on the cached
     # block), so the eager barrier only adds a serialized
     # materialization job in front of the join.
-    best = similarity.gemm_nearest_neighbor(v, vec_col="nv").localCheckpoint(
-        eager=False
-    )
+    best = similarity.gemm_nearest_neighbor(v, vec_col="nv").transform(barrier)
     x, y = best.alias("x"), best.alias("y")
     return (
         x.join(
@@ -2012,7 +2010,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("x").alias("sx"))
         .crossJoin(F.broadcast(n))
         .select("i", (F.col("sx") / F.col("n")).alias("m"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     ma = mu.select(F.col("i").alias("mi"), F.col("m").alias("m_i"))
     mb = mu.select(F.col("i").alias("mj"), F.col("m").alias("m_j"))
@@ -2027,7 +2025,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("s") / F.col("n") - F.col("m_i") * F.col("m_j"), 6
             ).alias("c"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     vec = mu.select("i", F.lit(1.0).alias("val"))
 
@@ -2044,7 +2042,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             r.crossJoin(F.broadcast(pivot))
             .select("i", F.round(F.col("val") / F.col("pivot"), 8).alias("val"))
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
 
     for _ in range(3):
@@ -2238,7 +2236,7 @@ def _ivf_ranked_memberships(
         .select(
             "cid", "vec_id", F.transform(e, lambda x: x / norm).alias("nv"), "rn"
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
 
 
@@ -2274,7 +2272,7 @@ def _ivf_mutual_pairs(
     # slower on exactly this shape).
     nn = similarity.grouped_gemm_nearest_neighbor(
         home, group_col="cid", vec_col="nv", queries=probe
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     x = nn.select(
         F.col("query_id").alias("qa"), F.col("vec_id").alias("qb"),
         F.col("cosine_sim").alias("sim"),
@@ -2384,7 +2382,7 @@ def mutual_nn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         mutual_nearest_embeddings(spark, sf_dir)
         .select("vec_a", "vec_b")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     # one quantizer pass feeds both curve points (p=1 is a rank filter
     # of the p=3 membership frame — identical selection)
@@ -2396,7 +2394,7 @@ def mutual_nn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf = (
             _ivf_mutual_pairs(spark, sf_dir, p, ranked=ranked3)
             .select("vec_a", "vec_b")
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
         cap = exact.join(ivf, ["vec_a", "vec_b"]).agg(
             F.count("*").alias("n_captured")

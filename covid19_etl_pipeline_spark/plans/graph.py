@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import graph
+from covid19_etl_pipeline_spark.operators.partitioning import barrier
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -186,7 +187,7 @@ def nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degree-ordered physical orientation (see description) — then
         # the oriented list is consumed three times by the triangle
         # joins: materialize once (vocabulary-sized, not fact-sized)
-        graph.orient_by_degree(edges, "a", "b").localCheckpoint(eager=False)
+        graph.orient_by_degree(edges, "a", "b").transform(barrier)
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (
@@ -698,11 +699,11 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     mm = sym.agg(F.sum("w").alias("m2"))
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.sum("w").alias("dw"))
-    lab = labels.select("node", "lbl").localCheckpoint(eager=False)
+    lab = labels.select("node", "lbl").transform(barrier)
     dc = (
         deg.join(F.broadcast(lab), "node")
         .groupBy("lbl")
@@ -794,8 +795,6 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edges — the raw graph is complete)",
 )
 def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from covid19_etl_pipeline_spark.operators.partitioning import iteration_barrier
-
     k = 10
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -828,10 +827,11 @@ def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     mw = symw.agg(F.avg("w").alias("mean_w"))
     # the fact-scale aggregation materializes ONCE; every peel round
     # reads graph-sized blocks
-    e = iteration_barrier(
+    e = barrier(
         symw.crossJoin(F.broadcast(mw))
         .filter(F.col("w") > F.col("mean_w"))
-        .select("a", "b")
+        .select("a", "b"),
+        eager=True,
     )
     for _ in range(3):
         keep = (
@@ -844,11 +844,10 @@ def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         kb = keep.select(F.col("n").alias("b"))
         # lazy: fixed rounds, no probe — the caller's action
         # materializes the unrolled peel chain
-        e = iteration_barrier(
+        e = barrier(
             e.join(F.broadcast(ka), "a", "left_semi").join(
                 F.broadcast(kb), "b", "left_semi"
-            ),
-            eager=False,
+            )
         )
     return (
         e.groupBy(F.col("a").alias("nation"))
@@ -946,14 +945,14 @@ def nation_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # runs once (the nation_trade_kcore backbone recipe: the FULL
         # graph is complete at scale, so prediction only makes sense
         # on the above-mean-weight backbone)
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     mean_w = edges.agg(F.avg("w").alias("m"))
     edges = (
         edges.crossJoin(F.broadcast(mean_w))
         .filter(F.col("w") > F.col("m"))
         .select("a", "b")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     sym = edges.select(F.col("a").alias("x"), F.col("b").alias("z")).unionByName(
         edges.select(F.col("b").alias("x"), F.col("a").alias("z"))
@@ -1075,7 +1074,7 @@ def nation_trade_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("cust_nation", "supp_nation").alias("b"),
         )
         .agg(F.count("*").alias("w"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     mean_w = weighted.agg(F.avg("w").alias("m"))
     bb = (
@@ -1087,7 +1086,7 @@ def nation_trade_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
         bb.select(F.col("a").alias("x"), F.col("b").alias("z"))
         .unionByName(bb.select(F.col("b").alias("x"), F.col("a").alias("z")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
 
     def expand(reach: DataFrame) -> DataFrame:
@@ -1097,7 +1096,7 @@ def nation_trade_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("e1.x").alias("x"), F.col("e2.z").alias("z"))
             .filter(F.col("x") != F.col("z"))
         )
-        return reach.unionByName(step).distinct().localCheckpoint(eager=False)
+        return reach.unionByName(step).distinct().transform(barrier)
 
     d2 = expand(d1)
     d3 = expand(d2)
@@ -1201,7 +1200,7 @@ def trade_edge_truss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("cust_nation", "supp_nation").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=False)  # feeds triangle joins + the base list
+        .transform(barrier)  # feeds triangle joins + the base list
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.operators.partitioning import barrier
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -53,7 +54,7 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        .localCheckpoint(eager=False)  # feeds marginals, the total, AND both pair-join sides
+        .transform(barrier)  # feeds marginals, the total, AND both pair-join sides
     )
     n_total = ob.select("l_orderkey").distinct().count()
     brand_f = ob.groupBy("p_brand").agg(F.count("*").alias("n_b"))
@@ -253,7 +254,7 @@ def frequent_part_pairs_pcy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("arr"))
         .filter(F.size("arr") >= 2)
-        .localCheckpoint(eager=False)  # both passes read the baskets
+        .transform(barrier)  # both passes read the baskets
     )
     n = F.size("arr")
     minsup = 2
@@ -396,13 +397,13 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=False)
+    items = li.select("l_orderkey", "l_partkey").distinct().transform(barrier)
     n = items.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     isup = (
-        items.groupBy("l_partkey").agg(F.count("*").alias("s")).localCheckpoint(eager=False)
+        items.groupBy("l_partkey").agg(F.count("*").alias("s")).transform(barrier)
     )
     freq = isup.filter(F.col("s") >= 3).select("l_partkey")
-    fitems = items.join(F.broadcast(freq), "l_partkey").localCheckpoint(eager=False)
+    fitems = items.join(F.broadcast(freq), "l_partkey").transform(barrier)
     a, b = fitems.alias("a"), fitems.alias("b")
     pairs = (
         a.join(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.operators.partitioning import barrier
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -496,7 +497,7 @@ def price_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(period.alias("period"), bin_.alias("bin"))
         .groupBy("period", "bin")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     totals = counts.groupBy("period").agg(F.sum("n").alias("tot"))
     fr = (F.col("n") + 0.5) / (F.col("tot") + 5.0)
@@ -1086,7 +1087,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("hv")
     sk = (
         h.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= k)
-    ).localCheckpoint(eager=False)  # the persisted per-segment sketch artifact
+    ).transform(barrier)  # the persisted per-segment sketch artifact
     per = sk.groupBy("event_type").agg(
         F.max(F.when(F.col("r") == k, F.col("hv"))).alias("kth"),
         F.count("*").alias("n_in_sketch"),

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 from covid19_etl_pipeline_spark.plans._shared import (
@@ -507,7 +507,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)  # feeds the total AND both unigram join roles
+        .transform(barrier)  # feeds the total AND both unigram join roles
     )
     total = u.agg(F.sum("c").alias("total"))
     bc = (
@@ -675,7 +675,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the vocab rollup feeds BOTH the broadcast join and the corpus
     # total — materialize the tiny table once so the corpus tokenize
     # isn't re-run per consumer (at 100 TB: the persisted LM artifact)
-    vocab = tok.groupBy("t").agg(F.count("*").alias("cnt")).localCheckpoint(eager=False)
+    vocab = tok.groupBy("t").agg(F.count("*").alias("cnt")).transform(barrier)
     total = vocab.agg(F.sum("cnt").alias("n"))
     scored = (
         tok.join(F.broadcast(vocab), "t")
@@ -800,14 +800,14 @@ def bpe_merge_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once (at corpus scale this is the persisted vocab)
     sym0 = words.select(
         F.array_join(F.split("w", ""), " ").alias("sym"), "freq"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     top = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "pair"))
     t1 = (
         _bpe_pair_counts(sym0)
         .withColumn("rn", top)
         .filter(F.col("rn") == 1)
         .select("pair", F.expr("replace(pair, ' ', '')").alias("new_symbol"), "cnt")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     sym1 = _bpe_apply_merge(sym0, t1)
     t2 = (
@@ -928,14 +928,14 @@ def bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = dw.groupBy("w").agg(F.count("*").alias("freq"))
     sym0v = words.select(
         F.array_join(F.split("w", ""), " ").alias("sym"), "freq"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     top = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "pair"))
     t1 = (
         _bpe_pair_counts(sym0v)
         .withColumn("rn", top)
         .filter(F.col("rn") == 1)
         .select("pair", F.expr("replace(pair, ' ', '')").alias("new_symbol"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     sym1v = _bpe_apply_merge(sym0v, t1)
     t2 = (
@@ -943,7 +943,7 @@ def bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", top)
         .filter(F.col("rn") == 1)
         .select("pair", F.expr("replace(pair, ' ', '')").alias("new_symbol"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     apply1 = F.trim(
         F.expr(
@@ -1054,11 +1054,11 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumers are sequential: the c2 broadcast build materializes
         # the blocks, the main job reuses them); measured a consistent
         # ~0.1s at sf0.1 and at 100 TB it halves the corpus passes
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     # vocabulary-sized stats artifact — one corpus pass, materialized
     # once; c1 and V derive from it without touching the corpus again
-    c2 = big.groupBy("prev", "w").agg(F.count("*").alias("n2")).localCheckpoint(eager=False)
+    c2 = big.groupBy("prev", "w").agg(F.count("*").alias("n2")).transform(barrier)
     c1 = c2.groupBy("prev").agg(F.sum("n2").alias("n1"))
     v = (
         c2.select(F.col("prev").alias("t"))
@@ -1806,14 +1806,14 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = dw.groupBy("w").agg(F.count("*").alias("freq"))
     sym0v = words.select(
         F.array_join(F.split("w", ""), " ").alias("sym"), "freq"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     top = F.row_number().over(Window.orderBy(F.col("cnt").desc(), "pair"))
     t1 = (
         _bpe_pair_counts(sym0v)
         .withColumn("rn", top)
         .filter(F.col("rn") == 1)
         .select("pair", F.expr("replace(pair, ' ', '')").alias("new_symbol"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     sym1v = _bpe_apply_merge(sym0v, t1)
     t2 = (
@@ -1821,7 +1821,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", top)
         .filter(F.col("rn") == 1)
         .select("pair", F.expr("replace(pair, ' ', '')").alias("new_symbol"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     spelled = dw.select("lang", F.array_join(F.split("w", ""), " ").alias("sym"))
     ap1 = spelled.crossJoin(
@@ -2027,7 +2027,7 @@ def quality_gate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) + F.lit(0.0)
     scored = docs.select(
         n.alias("n"), score.alias("score")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     totals = scored.agg(
         F.count("*").alias("nt"), F.sum("n").alias("tok_total")
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
-from covid19_etl_pipeline_spark.operators.partitioning import spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -51,7 +51,7 @@ def anomaly_mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = (
         ev.groupBy("user_id")
         .agg(F.expr("percentile(value, 0.5)").alias("med"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     dev = ev.join(F.broadcast(med), "user_id").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
@@ -388,7 +388,7 @@ def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary pass (measured 2x) — the checkpoint makes the sampling
     # read materialized blocks instead
     return (
-        out.localCheckpoint(eager=False)
+        out.transform(barrier)
         .select(
             "user_id",
             "event_date",

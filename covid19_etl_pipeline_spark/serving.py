@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid19_etl_pipeline_spark.operators.partitioning import barrier
 from covid19_etl_pipeline_spark.pipeline import (
     aggregate_by_country,
     aggregate_by_date,
@@ -355,7 +356,7 @@ def delete_keys(
 
     kc, pc = list(key_cols), list(partition_by)
     tbl = spark.read.parquet(path)
-    keys_d = F.broadcast(keys.select(*kc).distinct().localCheckpoint())
+    keys_d = F.broadcast(barrier(keys.select(*kc).distinct(), eager=True))
     per_part = (
         tbl.select(*kc, *pc)
         .join(keys_d.withColumn("__hit", F.lit(True)), kc, "left")
@@ -381,7 +382,9 @@ def delete_keys(
     )
     if partial:
         # the barrier cuts the read->overwrite dependency on `path`
-        remaining = tbl.where(in_parts(partial)).join(keys_d, kc, "left_anti").localCheckpoint()
+        remaining = barrier(
+            tbl.where(in_parts(partial)).join(keys_d, kc, "left_anti"), eager=True
+        )
         overwrite_partitions_dynamic(remaining, path, pc)
     for d in {posixpath.dirname(unquote(urlparse(r[0]).path)) for r in full_files}:
         shutil.rmtree(d, ignore_errors=True)

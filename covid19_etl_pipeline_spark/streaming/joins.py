@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from covid19_etl_pipeline_spark.operators.partitioning import barrier
 from covid19_etl_pipeline_spark.operators.setops import upsert_on_key
 
 
@@ -62,7 +63,7 @@ def foreach_batch_upsert(
     into ``table`` on ``keys`` (updates win over existing rows).
 
     ``reduce_batch`` pre-collapses the batch to one row per key (e.g.
-    latest-by-timestamp) before the merge. ``localCheckpoint``
+    latest-by-timestamp) before the merge. An eager ``barrier``
     materializes the merged result so the table can be overwritten
     while being read. ``path`` makes the table external (explicit data
     location instead of the warehouse dir).
@@ -75,7 +76,7 @@ def foreach_batch_upsert(
             merged = upsert_on_key(spark.table(table), reduced, keys)
         else:
             merged = reduced
-        writer = merged.localCheckpoint().write.mode("overwrite")
+        writer = barrier(merged, eager=True).write.mode("overwrite")
         if path is not None:
             writer = writer.option("path", path)
         writer.saveAsTable(table)

@@ -165,6 +165,7 @@ def test_connected_components_large_graph_join_strategy(spark, monkeypatch):
     at 4 MiB). Forcing the bound to 0 exercises the large-graph path on
     a small fixture; labels must be identical to the broadcast path."""
     from covid19_etl_pipeline_spark.operators import dedup as D
+    from covid19_etl_pipeline_spark.operators import partitioning
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
@@ -174,7 +175,7 @@ def test_connected_components_large_graph_join_strategy(spark, monkeypatch):
         r["node"]: r["label"]
         for r in D.connected_components(edges, "a", "b").collect()
     }
-    monkeypatch.setattr(D, "BROADCAST_ROW_BOUND", 0)
+    monkeypatch.setattr(partitioning, "BROADCAST_ROW_BOUND", 0)
     hashed = {
         r["node"]: r["label"]
         for r in D.connected_components(edges, "a", "b").collect()
@@ -185,8 +186,8 @@ def test_connected_components_large_graph_join_strategy(spark, monkeypatch):
 
 
 def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
-    """The CHECKPOINT_DIR_CONF toggle swaps every iteration barrier to
-    the storage-backed reliable checkpoint; labels must be identical to
+    """The CHECKPOINT_DIR_CONF toggle swaps every barrier to the
+    storage-backed reliable checkpoint; labels must be identical to
     the default localCheckpoint mode, and checkpoint files must
     actually land in the configured dir (proving the toggle routed)."""
     import os
@@ -251,10 +252,10 @@ def test_reliable_checkpoint_survives_block_loss(spark, tmp_path, monkeypatch):
     )
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 4: 4, 5: 4, 6: 4, 7: 4}
 
-    real_barrier = partitioning.iteration_barrier
+    real_barrier = partitioning.barrier
     calls = {"n": 0}
 
-    def sabotaged(df, eager=True):
+    def sabotaged(df, eager=False):
         out = real_barrier(df, eager=eager)
         calls["n"] += 1
         # after the 3rd barrier (round-0 labels built, edges_m's eager
@@ -264,7 +265,7 @@ def test_reliable_checkpoint_survives_block_loss(spark, tmp_path, monkeypatch):
             _kill_cached_blocks(df.sparkSession)
         return out
 
-    monkeypatch.setattr(dedup, "iteration_barrier", sabotaged)
+    monkeypatch.setattr(dedup, "barrier", sabotaged)
 
     # default mode: lineage was truncated into the lost blocks —
     # any downstream action must surface the loss, not silently

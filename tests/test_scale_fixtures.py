@@ -7,6 +7,7 @@ and cosine-preserving embedding rotation."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -109,3 +110,23 @@ def test_embeddings_rotated_norm_preserving(spark, fixture_dir):
     # legitimately collide, so require the overwhelming majority moved)
     total = j.count()
     assert j.filter(F.col("e1") == F.col("e2")).count() < 0.05 * total
+
+
+def test_parquet_bytes_counts_data_files_and_names_missing_table(tmp_path):
+    """The output-file sizing walk sums ``*.parquet`` data only (no
+    ``_SUCCESS``/``.crc`` sidecars) and a missing table fails with an
+    error naming the table and the --src dir."""
+    from tools.make_scale_fixtures import parquet_bytes
+
+    ds = tmp_path / "orders.parquet"
+    ds.mkdir()
+    (ds / "part-0.parquet").write_bytes(b"x" * 10)
+    (ds / "part-1.parquet").write_bytes(b"x" * 5)
+    (ds / "_SUCCESS").write_bytes(b"")
+    (ds / ".part-0.parquet.crc").write_bytes(b"x" * 100)
+    (tmp_path / "region.parquet").write_bytes(b"x" * 7)
+    assert parquet_bytes(str(tmp_path), "orders") == 15
+    assert parquet_bytes(str(tmp_path), "region") == 7
+    missing = rf"'lineitem'.*{re.escape(str(tmp_path))}"
+    with pytest.raises(FileNotFoundError, match=missing):
+        parquet_bytes(str(tmp_path), "lineitem")

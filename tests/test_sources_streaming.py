@@ -739,16 +739,22 @@ def test_dynamic_partition_overwrite_replaces_only_landed(spark, sf_dir, tmp_pat
 
 
 def test_reliable_checkpoint_truncates_lineage(spark, sf_dir, tmp_path):
-    """The checkpointed frame reads back identical rows and its plan is
-    a checkpoint scan, not the original join tree."""
+    """With CHECKPOINT_DIR_CONF set, a barrier's frame reads back
+    identical rows and its plan is a checkpoint scan, not the original
+    join tree."""
     from covid19_etl_pipeline_spark.operators.partitioning import (
-        reliable_checkpoint,
+        CHECKPOINT_DIR_CONF,
+        barrier,
     )
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     region = spark.read.parquet(f"{sf_dir}/region.parquet")
     joined = nation.join(region, nation.n_regionkey == region.r_regionkey)
-    ck = reliable_checkpoint(joined, str(tmp_path / "ckpt"))
+    spark.conf.set(CHECKPOINT_DIR_CONF, str(tmp_path / "ckpt"))
+    try:
+        ck = barrier(joined)
+    finally:
+        spark.conf.unset(CHECKPOINT_DIR_CONF)
     assert ck.count() == joined.count()
     plan = ck._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan and "Join" not in plan

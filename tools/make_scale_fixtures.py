@@ -32,6 +32,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import sys
 
@@ -84,6 +85,19 @@ def rotate_embeddings(df):
     )
 
 
+def parquet_bytes(src: str, name: str) -> int:
+    """Bytes of table ``name``'s parquet data under ``src``: the file
+    itself, or every ``*.parquet`` file of a dataset dir (its
+    ``_SUCCESS``/``.crc`` sidecars are not data)."""
+    path = os.path.join(src, f"{name}.parquet")
+    files = [path] if os.path.isfile(path) else glob.glob(
+        f"{path}/**/*.parquet", recursive=True
+    )
+    if not files:
+        raise FileNotFoundError(f"table {name!r} has no parquet data in --src {src}")
+    return sum(map(os.path.getsize, files))
+
+
 def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--src", default="/root/testdata/sf0.1")
@@ -93,6 +107,10 @@ def main() -> int:
     out = args.out or f"/tmp/spark_graft_sfx{args.k}"
     if os.path.realpath(out).startswith("/root/testdata"):
         sys.exit("refusing to write under /root/testdata")
+
+    # every table checked before the session starts: a missing one
+    # fails here, naming itself, not halfway through the writes
+    src_bytes = {name: parquet_bytes(args.src, name) for name in (*SHARED_DIMS, *KEYED)}
 
     from covid19_etl_pipeline_spark.catalog import load_table
     from covid19_etl_pipeline_spark.session import get_spark
@@ -128,14 +146,8 @@ def main() -> int:
         # the source size × k, floored at the core count — real deploys
         # get thousands of splits; the fixture should not be the one
         # place the engine reads a giant unsplittable row group.
-        src_path = os.path.join(args.src, f"{name}.parquet")
-        src_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(src_path)
-            for f in fs
-        ) if os.path.isdir(src_path) else os.path.getsize(src_path)
         n_files = max(
-            os.cpu_count() or 8, -(-src_bytes * args.k // (32 * 1024 * 1024))
+            os.cpu_count() or 8, -(-src_bytes[name] * args.k // (32 * 1024 * 1024))
         )
         df.drop(COPY).repartition(int(n_files)).write.mode("overwrite").parquet(
             os.path.join(out, f"{name}.parquet")
