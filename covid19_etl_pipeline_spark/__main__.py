@@ -1,11 +1,12 @@
 """End-to-end ETL entry point: ``python -m covid19_etl_pipeline_spark``.
 
 The engine twin of the reference's ``python main.py`` orchestration
-(main.py:53-174): extract → transform/fan-out → publish serving star,
-with per-phase wall-clock timings reported as one JSON line. Each phase
-is a thin call into the library API (SURVEY §2.11 L2/L3: keep the
-callable surface scheduler-agnostic — Airflow, cron, or a shell wrap
-this module without modification).
+(main.py:53-174): extract → transform/fan-out → publish the serving
+star from the marts, reported as one JSON line: per-phase ``timings``,
+the ``marts`` and ``serving`` paths and the source's ``quality``
+counters. Each phase is a thin call into the library API (SURVEY §2.11
+L2/L3: keep the callable surface scheduler-agnostic — Airflow, cron,
+or a shell wrap this module without modification).
 
 With ``--input`` the extract phase reads a CSV with the OWID-shaped
 schema; without it a small deterministic demo frame stands in, so the
@@ -25,7 +26,7 @@ from pyspark.sql import types as T
 from covid19_etl_pipeline_spark.pipeline import run_transform_fanout
 from covid19_etl_pipeline_spark.serving import publish_star_schema
 from covid19_etl_pipeline_spark.session import get_spark
-from covid19_etl_pipeline_spark.sources.io import read_csv, validate_source
+from covid19_etl_pipeline_spark.sources.io import observe_quality, read_csv, validate_source
 
 #: OWID-shaped raw schema (reference config/config.yaml source columns;
 #: everything string-typed at the edge — the typed cast pipeline is the
@@ -64,7 +65,9 @@ def run_etl(
     input_csv: str | None = None,
     countries: tuple[str, ...] = (),
 ) -> dict:
-    """Run extract → transform → load; return phase timings + outputs."""
+    """Run extract → transform → load; return phase timings, outputs
+    and the source's quality counters, which ride the fan-out's first
+    write (observed after validation: its sample job must not fire them)."""
     timings: dict[str, float] = {}
 
     t0 = time.time()
@@ -75,6 +78,7 @@ def run_etl(
     )
     if not validate_source(raw):
         raise ValueError("extract produced an empty or invalid source")
+    raw, quality = observe_quality(raw)
     timings["extract"] = round(time.time() - t0, 3)
 
     t0 = time.time()
@@ -82,10 +86,10 @@ def run_etl(
     timings["transform"] = round(time.time() - t0, 3)
 
     t0 = time.time()
-    served = publish_star_schema(spark, raw, f"{out_dir}/serving")
+    served = publish_star_schema(spark, outputs, f"{out_dir}/serving")
     timings["load"] = round(time.time() - t0, 3)
 
-    return {"timings": timings, "marts": outputs, "serving": served}
+    return {"timings": timings, "marts": outputs, "serving": served, "quality": quality.get}
 
 
 def main(argv: list[str] | None = None) -> int:

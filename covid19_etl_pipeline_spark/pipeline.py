@@ -17,7 +17,8 @@ The reference's load phase (parquet → pandas → SQLite,
 data_loader.py:200-358) becomes partitioned-parquet ``write`` /
 ``saveAsTable`` — the serving tier is ``spark.sql`` over the catalog
 (catalog.query), replacing SQLite + B-tree indices with partition
-pruning + file stats.
+pruning + file stats. As in the reference (data_loader.py:194), the load
+reads back the marts this fan-out wrote, so a batch transforms once.
 """
 
 from __future__ import annotations

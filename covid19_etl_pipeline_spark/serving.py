@@ -2,9 +2,10 @@
 the reference's SQLite tier.
 
 Reference mapping:
-- ``create_tables`` DDL ×4 + indices (data_loader.py:59-180)
-  → :func:`publish_star_schema`: partitioned parquet datasets +
-  registered views (indices → partition pruning + file stats).
+- ``create_tables`` DDL ×4 + indices (data_loader.py:59-180) over the
+  transform's parquet (data_loader.py:194) → :func:`publish_star_schema`:
+  each mart read back into a partitioned parquet dataset + registered
+  view (indices → partition pruning + file stats).
 - truncate-and-append chunked loads (data_loader.py:200-358)
   → ``mode("overwrite")`` dataset writes (atomic per directory;
   chunking is what partitions already are).
@@ -18,23 +19,27 @@ reference's DDL defaults (data_loader.py:100 etc.).
 
 from __future__ import annotations
 
+import hashlib
+import os
+import posixpath
+import shutil
+import time
+from functools import reduce
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid19_etl_pipeline_spark.operators.partitioning import barrier
-from covid19_etl_pipeline_spark.pipeline import (
-    aggregate_by_country,
-    aggregate_by_date,
-    transform_covid_data,
-)
-from covid19_etl_pipeline_spark.sources.io import write_parquet
+from covid19_etl_pipeline_spark.sources.io import overwrite_partitions_dynamic, write_parquet
 
-#: Serving-table names (mirrors data_loader.py:66-160 DDL).
-SERVING_TABLES = (
-    "covid_cases",
-    "aggregated_stats",
-    "global_daily_stats",
-)
+#: Serving star table → (the mart it loads from, its partition columns);
+#: the tables mirror data_loader.py:66-160 DDL.
+STAR_FROM_MARTS: dict[str, tuple[str, tuple[str, ...]]] = {
+    "covid_cases": ("covid_data_transformed", ("year",)),
+    "aggregated_stats": ("covid_by_country", ()),
+    "global_daily_stats": ("covid_by_date", ()),
+}
 
 
 def with_audit_column(df: DataFrame) -> DataFrame:
@@ -134,26 +139,20 @@ def read_jdbc(
 
 def publish_star_schema(
     spark: SparkSession,
-    covid_raw: DataFrame,
+    marts: dict[str, str],
     root: str,
 ) -> dict[str, str]:
-    """Publish the serving star: typed fact (year-partitioned), country
-    rollup, global daily rollup — one cached transform, three sinks."""
-    fact = transform_covid_data(covid_raw).cache()
-    try:
-        return {
-            "covid_cases": overwrite_table(
-                spark, fact, "covid_cases", root, partition_by=("year",)
-            ),
-            "aggregated_stats": overwrite_table(
-                spark, aggregate_by_country(fact), "aggregated_stats", root
-            ),
-            "global_daily_stats": overwrite_table(
-                spark, aggregate_by_date(fact), "global_daily_stats", root
-            ),
-        }
-    finally:
-        fact.unpersist()
+    """Publish the serving star from the ``{mart name: path}`` mapping
+    ``run_transform_fanout`` returns: each table of
+    :data:`STAR_FROM_MARTS` is its mart read back from parquet plus
+    ``created_at`` — the typed fact (year-partitioned), the country
+    rollup and the global daily rollup, none of them recomputed."""
+    return {
+        name: overwrite_table(
+            spark, spark.read.parquet(marts[mart]), name, root, partition_by=parts
+        )
+        for name, (mart, parts) in STAR_FROM_MARTS.items()
+    }
 
 
 def publish_masked_view(
@@ -204,36 +203,45 @@ def publish_versioned(
     table formats (Delta/Iceberg) implement with manifests, from Spark
     primitives.
     """
-    import os
-
     data_dir = f"{root}/{name}/v={version}"
     write_parquet(with_audit_column(df), data_dir)
-    pointer, tmp = f"{root}/{name}/_CURRENT", f"{root}/{name}/_CURRENT.tmp"
+    _write_pointer(name, root, version)
+    return data_dir
+
+
+def _read_pointer(name: str, root: str) -> str | None:
+    """The version ``_CURRENT`` names, or None when nothing is published."""
+    try:
+        with open(f"{root}/{name}/_CURRENT") as fh:
+            return fh.read().strip()
+    except FileNotFoundError:
+        return None
+
+
+def _write_pointer(name: str, root: str, version: str) -> None:
+    """Point ``_CURRENT`` at ``version``: write a temp file, then
+    ``os.replace`` it over the pointer (atomic on POSIX)."""
     os.makedirs(f"{root}/{name}", exist_ok=True)
+    tmp = f"{root}/{name}/_CURRENT.tmp"
     with open(tmp, "w") as fh:
         fh.write(version)
-    os.replace(tmp, pointer)  # atomic on POSIX
-    return data_dir
+    os.replace(tmp, f"{root}/{name}/_CURRENT")
 
 
 def read_current(spark: SparkSession, name: str, root: str) -> DataFrame:
     """Resolve the ``_CURRENT`` pointer and read that version."""
-    with open(f"{root}/{name}/_CURRENT") as fh:
-        version = fh.read().strip()
+    version = _read_pointer(name, root)
+    if version is None:
+        raise FileNotFoundError(f"no _CURRENT pointer for {name} under {root}")
     return spark.read.parquet(f"{root}/{name}/v={version}")
 
 
 def rollback_version(name: str, root: str, version: str) -> None:
     """Point ``_CURRENT`` back at an existing version — one file write,
     zero data movement."""
-    import os
-
     if not os.path.isdir(f"{root}/{name}/v={version}"):
         raise FileNotFoundError(f"no published version {version!r} for {name}")
-    tmp = f"{root}/{name}/_CURRENT.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(version)
-    os.replace(tmp, f"{root}/{name}/_CURRENT")
+    _write_pointer(name, root, version)
 
 
 def cached_query(
@@ -253,8 +261,6 @@ def cached_query(
     write-temp-then-rename publication as the versioned store, so
     concurrent missers race benignly.
     """
-    import hashlib
-
     key = hashlib.md5(sql.encode()).hexdigest()[:16]
     return cached_frame(
         spark, f"q_{key}", lambda: spark.sql(sql), cache_root, ttl_seconds
@@ -273,9 +279,6 @@ def cached_frame(
     DataFrame-API panels (the dashboard's canned queries) share the
     same cross-process TTL cache as SQL-text queries. ``build`` runs
     only on a miss."""
-    import os
-    import time
-
     snap = os.path.join(cache_root, key)
     marker = os.path.join(snap, "_SUCCESS")
     if os.path.exists(marker) and time.time() - os.path.getmtime(marker) < ttl_seconds:
@@ -283,14 +286,10 @@ def cached_frame(
     tmp = f"{snap}.tmp{os.getpid()}"
     build().write.mode("overwrite").parquet(tmp)
     try:
-        import shutil
-
         if os.path.exists(snap):
             shutil.rmtree(snap)
         os.rename(tmp, snap)
     except OSError:
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.parquet(snap)
 
@@ -300,14 +299,8 @@ def list_versions(spark: SparkSession, name: str, root: str) -> DataFrame:
     table format would give you): one row per published version with
     its row count and whether it is current. Counts come from parquet
     footers (metadata-only), not data scans."""
-    import os
-
     base = f"{root}/{name}"
-    current = None
-    cur_path = os.path.join(base, "_CURRENT")
-    if os.path.exists(cur_path):
-        with open(cur_path) as fh:
-            current = fh.read().strip()
+    current = _read_pointer(name, root)
     rows = []
     for entry in sorted(os.listdir(base)):
         if entry.startswith("v="):
@@ -347,13 +340,6 @@ def delete_keys(
 
     Returns the number of rows deleted.
     """
-    import posixpath
-    import shutil
-    from functools import reduce
-    from urllib.parse import unquote, urlparse
-
-    from covid19_etl_pipeline_spark.sources.io import overwrite_partitions_dynamic
-
     kc, pc = list(key_cols), list(partition_by)
     tbl = spark.read.parquet(path)
     keys_d = F.broadcast(barrier(keys.select(*kc).distinct(), eager=True))
@@ -401,15 +387,8 @@ def vacuum_versions(name: str, root: str, keep_last: int = 2) -> list[str]:
     the deleted version ids (lexicographic version order, the same
     ordering list_versions displays).
     """
-    import os
-    import shutil
-
     base = f"{root}/{name}"
-    current = None
-    cur_path = os.path.join(base, "_CURRENT")
-    if os.path.exists(cur_path):
-        with open(cur_path) as fh:
-            current = fh.read().strip()
+    current = _read_pointer(name, root)
     versions = sorted(
         e[2:] for e in os.listdir(base) if e.startswith("v=")
     )

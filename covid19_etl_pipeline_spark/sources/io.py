@@ -33,13 +33,22 @@ def read_csv(
     schema: T.StructType | None = None,
     header: bool = True,
 ) -> DataFrame:
-    """CSV scan (S4). Explicit schema preferred; inference is dev-only."""
+    """CSV scan (S4). Explicit schema preferred; inference is dev-only.
+
+    With a header, the schema binds by column NAME as the reference's
+    read does (data_transformer.py:85-89), not by position as Spark's
+    would: one header job reads the names, undeclared columns are
+    dropped and a declared column the header lacks raises."""
     reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
+    if schema is None:
+        return reader.option("inferSchema", "true").csv(path)
+    declared = {f.name: f for f in schema.fields}
+    names = reader.csv(path).columns if header else list(declared)
+    missing = [n for n in declared if n not in names]
+    if missing:
+        raise ValueError(f"{path}: header lacks declared columns {missing}")
+    in_file = T.StructType([declared.get(n, T.StructField(n, T.StringType())) for n in names])
+    return reader.schema(in_file).csv(path).select(*declared)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -10,7 +10,7 @@ Design differences from the reference, deliberate:
   DataFrames' worth of rows through XCom; here each task writes parquet
   to a staging directory and XComs only the PATH — the only shape that
   survives real data volumes (XCom is a metadata store, not a data
-  plane).
+  plane). Load reads the marts named in transform's manifest.
 - **One SparkSession per task, stopped on exit.** Scheduler workers
   must not leak JVMs between retries.
 - **Import-gated.** The engine does not depend on Airflow; this module
@@ -77,17 +77,18 @@ def transform_task(run_id: str, raw_path: str, countries: tuple[str, ...] = ()) 
         stop_spark()
 
 
-def load_task(run_id: str, raw_path: str) -> str:
-    """Load: publish the 4-table star schema to the serving directory.
-    Returns the serving root."""
+def load_task(run_id: str, manifest_path: str) -> str:
+    """Load: publish the star schema to the serving directory from the
+    marts the transform's manifest lists. Returns the serving root."""
     from covid19_etl_pipeline_spark.serving import publish_star_schema
     from covid19_etl_pipeline_spark.session import get_spark, stop_spark
 
+    with open(manifest_path) as fh:
+        marts = json.load(fh)
     spark = get_spark(app_name="etl-dag-load")
     try:
-        raw = spark.read.parquet(raw_path)
         out = f"{_staging(run_id)}/serving"
-        publish_star_schema(spark, raw, out)
+        publish_star_schema(spark, marts, out)
         return out
     finally:
         stop_spark()
@@ -140,8 +141,8 @@ try:  # pragma: no cover — exercised only where Airflow is installed
         ctx["task_instance"].xcom_push(key="manifest", value=manifest)
 
     def _load(**ctx):
-        raw = ctx["task_instance"].xcom_pull(task_ids="extract", key="raw_path")
-        serving = load_task(ctx["run_id"], raw)
+        manifest = ctx["task_instance"].xcom_pull(task_ids="transform", key="manifest")
+        serving = load_task(ctx["run_id"], manifest)
         ctx["task_instance"].xcom_push(key="serving", value=serving)
 
     def _notify(**ctx):

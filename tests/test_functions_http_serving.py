@@ -13,6 +13,7 @@ from covid19_etl_pipeline_spark.functions.scalars import (
     per_capita,
     safe_div,
 )
+from covid19_etl_pipeline_spark.pipeline import run_transform_fanout
 from covid19_etl_pipeline_spark.serving import publish_star_schema
 from covid19_etl_pipeline_spark.sources import http
 
@@ -110,7 +111,8 @@ def test_publish_star_schema_and_query(spark, tmp_path):
         ["location", "iso_code", "date", "total_cases", "total_deaths",
          "new_cases", "new_deaths", "population"],
     )
-    paths = publish_star_schema(spark, raw, str(tmp_path))
+    marts = run_transform_fanout(raw, str(tmp_path / "marts"))
+    paths = publish_star_schema(spark, marts, str(tmp_path))
     assert set(paths) == {"covid_cases", "aggregated_stats", "global_daily_stats"}
     # ad-hoc SQL surface over the registered views (S9)
     top = spark.sql(

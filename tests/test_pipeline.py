@@ -185,6 +185,80 @@ def test_dag_task_chain(spark, tmp_path, monkeypatch):
     for p in marts.values():
         assert spark.read.parquet(p).count() > 0
 
-    serving = dag_mod.load_task(run_id, raw_path)
+    serving = dag_mod.load_task(run_id, manifest)
     summary = dag_mod.notify_task(run_id, manifest, serving)
     assert "3 marts" in summary
+
+
+def test_run_etl_transforms_and_aggregates_once(spark, tmp_path, monkeypatch):
+    """One batch parses, transforms and aggregates once: the serving
+    star loads from the marts. Every module binding of the three
+    functions is counted, so a by-name import cannot hide a call."""
+    import sys
+
+    from covid19_etl_pipeline_spark import pipeline
+    from covid19_etl_pipeline_spark.__main__ import run_etl
+
+    calls = {}
+    for name in ("transform_covid_data", "aggregate_by_country", "aggregate_by_date"):
+        fn = getattr(pipeline, name)
+        calls[name] = 0
+
+        def counted(*a, _fn=fn, _name=name, **kw):
+            calls[_name] += 1
+            return _fn(*a, **kw)
+
+        for mod in list(sys.modules.values()):
+            if getattr(mod, "__dict__", {}).get(name) is fn:
+                monkeypatch.setattr(mod, name, counted)
+    run_etl(spark, str(tmp_path / "etl"))
+    assert calls == dict.fromkeys(calls, 1)
+
+
+def test_star_tables_equal_their_marts(spark, covid_df, tmp_path):
+    """Each serving table is its mart plus the ``created_at`` audit
+    column: same columns in the same order, same rows both ways."""
+    from covid19_etl_pipeline_spark.serving import STAR_FROM_MARTS, publish_star_schema
+
+    marts = run_transform_fanout(covid_df, str(tmp_path / "marts"))
+    served = publish_star_schema(spark, marts, str(tmp_path / "serving"))
+    assert set(served) == set(STAR_FROM_MARTS)
+    for table, (mart, _parts) in STAR_FROM_MARTS.items():
+        star = spark.read.parquet(served[table])
+        assert "created_at" in star.columns
+        star = star.drop("created_at")
+        want = spark.read.parquet(marts[mart])
+        assert star.columns == want.columns, table
+        assert star.exceptAll(want).count() == 0, table
+        assert want.exceptAll(star).count() == 0, table
+
+
+def test_run_etl_reports_quality_counters(spark, tmp_path):
+    """The report's ``quality`` counters (rows and per-column nulls of
+    the raw source) ride the fan-out's write and match DuckDB over the
+    CSV. The header is in OWID order with an undeclared column, so the
+    source also reads by header name."""
+    import duckdb
+
+    from covid19_etl_pipeline_spark.__main__ import COVID_RAW_SCHEMA, run_etl
+
+    lines = ["iso_code,continent,location,date,total_cases,new_cases,"
+             "total_deaths,new_deaths,population"]
+    for i in range(40):
+        loc, day = ("Germany", "DEU") if i % 2 else ("France", "FRA"), i // 2 + 1
+        cells = ["" if (i + k) % (k + 3) == 0 else str(10 * i + k) for k in range(4)]
+        lines.append(f"{loc[1]},Europe,{loc[0]},2021-01-{day:02d},{','.join(cells)},1000")
+    csv = tmp_path / "owid.csv"
+    csv.write_text("\n".join(lines) + "\n")
+
+    report = run_etl(spark, str(tmp_path / "etl"), str(csv))
+    cols = [f.name for f in COVID_RAW_SCHEMA.fields]
+    row = duckdb.connect().execute(
+        "SELECT count(*), " + ", ".join(f"count(*) - count({c})" for c in cols)
+        + " FROM read_csv(?, header=true, all_varchar=true)",
+        [str(csv)],
+    ).fetchone()
+    assert report["quality"] == {"n_rows": row[0], **{f"null_{c}": n for c, n in zip(cols, row[1:])}}
+    assert report["quality"]["null_total_cases"] > 0
+    locs = spark.read.parquet(report["serving"]["aggregated_stats"]).select("location", "iso_code")
+    assert sorted(map(tuple, locs.collect())) == [("France", "FRA"), ("Germany", "DEU")]

@@ -31,12 +31,25 @@ CSV_SCHEMA = T.StructType(
 def test_csv_roundtrip_explicit_schema(spark, tmp_path):
     """Reference CSV round-trip (tests/test_transformer.py:63-78), with
     the engine's explicit-schema contract instead of inference."""
+    import pytest
+
     p = tmp_path / "t.csv"
     p.write_text("col1,col2\n1,a\n2,b\n3,c\n")
     df = read_csv(spark, str(p), schema=CSV_SCHEMA)
     assert df.count() == 3
     assert dict(df.dtypes) == {"col1": "bigint", "col2": "string"}
     assert validate_source(df)
+    # the schema binds by header name: reordered columns plus an
+    # undeclared one read as declared, the extra column dropped
+    q = tmp_path / "reordered.csv"
+    q.write_text("extra,col2,col1\nx,a,1\ny,b,2\n")
+    df = read_csv(spark, str(q), schema=CSV_SCHEMA)
+    assert df.columns == ["col1", "col2"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
+    # a declared column the header lacks raises
+    q.write_text("col2,other\na,1\n")
+    with pytest.raises(ValueError, match="col1"):
+        read_csv(spark, str(q), schema=CSV_SCHEMA)
 
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
