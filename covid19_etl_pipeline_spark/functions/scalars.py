@@ -1,9 +1,10 @@
 """Scalar column helpers (SURVEY §2.8 F5-F10).
 
-The reference's scalar surface is arithmetic with null guards plus
-display-side number humanization (``f"{x/1e6:.2f}M"``,
-dashboard.py:200-202, :323-331). Everything here is a Column-in /
-Column-out builtin composition — codegen-friendly, no UDFs.
+The reference's scalar surface is arithmetic with null guards
+(``operators.projection.guarded_ratio``) plus display-side number
+humanization (``f"{x/1e6:.2f}M"``, dashboard.py:200-202, :323-331),
+which lives here as a Column-in / Column-out builtin composition —
+codegen-friendly, no UDFs.
 """
 
 from __future__ import annotations
@@ -14,28 +15,6 @@ from pyspark.sql import functions as F
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
-
-
-def safe_div(num: Column | str, den: Column | str) -> Column:
-    """NULL-on-zero division (the engine-wide form of the reference's
-    when-guards; Spark's ``/`` already returns NULL on 0 denominator for
-    doubles — this also guards negative-zero and NULL)."""
-    d = _col(den)
-    return F.when(d != 0, _col(num) / d).otherwise(F.lit(None))
-
-
-def pct(num: Column | str, den: Column | str) -> Column:
-    """Guarded percentage: num/den*100, NULL when den <= 0
-    (data_transformer.py:148-154 shape)."""
-    d = _col(den)
-    return F.when(d > 0, _col(num) / d * 100.0).otherwise(F.lit(None))
-
-
-def per_capita(value: Column | str, population: Column | str, per: float = 100_000.0) -> Column:
-    """Per-N-population normalization (cases_per_100k,
-    data_transformer.py:243-249)."""
-    p = _col(population)
-    return F.when(p > 0, _col(value) / p * per).otherwise(F.lit(None))
 
 
 def humanize_number(c: Column | str) -> Column:

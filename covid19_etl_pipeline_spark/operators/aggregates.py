@@ -3,9 +3,10 @@
 Reference parity:
 - A1 multi-key hash aggregate with 8 simultaneous measures
   (aggregate_by_country, data_transformer.py:219-256)
-- A2 single-key global rollup (aggregate_by_date, data_transformer.py:258-295)
 - A3 post-aggregation derived measures (data_transformer.py:243-249)
-- A4/A5 scalar counts (data_transformer.py:434-448; data_loader.py:400)
+
+The A2 per-date global rollup is ``pipeline.aggregate_by_date``; the
+A4/A5 scalar counts are ``catalog.table_stats``.
 
 Scale notes: Spark plans these as partial (map-side) + final hash
 aggregates automatically — one shuffle on the group keys, combiner
@@ -42,29 +43,6 @@ def rollup_by_entity(
     if order_by is not None:
         out = out.orderBy(order_by)
     return out
-
-
-def global_daily_rollup(
-    df: DataFrame,
-    date_col: str,
-    sum_cols: Sequence[str],
-    reporting_col: str | None = None,
-) -> DataFrame:
-    """Per-date global rollup (aggregate_by_date, data_transformer.py:270-276).
-
-    ``reporting_col`` reproduces ``F.count(col)`` non-null semantics for
-    ``countries_reporting`` (data_transformer.py:275 — NOT countDistinct;
-    preserved exactly, see SURVEY §2.4).
-    """
-    aggs: list[Column] = [F.sum(c).alias(f"global_{c}") for c in sum_cols]
-    if reporting_col is not None:
-        aggs.append(F.count(F.col(reporting_col)).alias("countries_reporting"))
-    return df.groupBy(date_col).agg(*aggs)
-
-
-def table_count(df: DataFrame) -> int:
-    """Scalar row count (A4/A5)."""
-    return df.count()
 
 
 def null_profile(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:

@@ -3,12 +3,14 @@
 Reference parity:
 - IN-list membership filter  → data_transformer.py:297-317 (P4), the
   dashboard's ``WHERE location IN (...)`` (P5, dashboard.py:109-140)
-- null-guard predicate       → dashboard.py:307-310 (P7)
-- threshold predicate        → data_transformer.py:151 (P8)
 
-All of these compile to Catalyst Filter nodes that push into the
-parquet scan (``PushedFilters`` in ``.explain``) — at 100 TB the filter
-is applied at row-group granularity via min/max + dictionary stats
+The null-guard (P7, dashboard.py:307-310) and threshold (P8,
+data_transformer.py:151) predicates are one ``df.filter`` each; the
+``notnull_threshold`` query writes them inline.
+
+Filters compile to Catalyst Filter nodes that push into the parquet
+scan (``PushedFilters`` in ``.explain``) — at 100 TB the filter is
+applied at row-group granularity via min/max + dictionary stats
 before any row is materialized.
 """
 
@@ -29,17 +31,3 @@ def filter_in_list(df: DataFrame, column: str, values: Iterable[str]) -> DataFra
     plan; a broadcast semi join scales.
     """
     return df.filter(F.col(column).isin(list(values)))
-
-
-def filter_not_null(df: DataFrame, *columns: str) -> DataFrame:
-    """Keep rows where all listed columns are non-null (P7)."""
-    pred = None
-    for c in columns:
-        clause = F.col(c).isNotNull()
-        pred = clause if pred is None else (pred & clause)
-    return df.filter(pred) if pred is not None else df
-
-
-def filter_threshold(df: DataFrame, column: str, threshold: float = 0.0) -> DataFrame:
-    """Keep rows where ``column > threshold`` (P8)."""
-    return df.filter(F.col(column) > F.lit(threshold))

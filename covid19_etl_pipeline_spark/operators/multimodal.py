@@ -7,10 +7,8 @@ codecs carry the REAL decode paths — PNG, uncompressed BMP, binary
 netpbm, baseline JPEG (:mod:`.jpeg`), lossless WebP/VP8L
 (:mod:`.vp8l`) — and WAV PCM for audio. Operators decode, resample,
 and re-encode real pixels/samples through Arrow-batched
-``mapInPandas``. The only remaining stand-ins are explicit and
-opt-in: formats NEEDING external libs (AVIF, lossy WebP) raise
-``NotImplementedError`` at the :func:`decode_image` boundary unless a
-caller passes ``allow_stub=True`` (byte-slice plumbing stand-in), and
+``mapInPandas``. Formats NEEDING external libs (AVIF, lossy WebP)
+raise at the :func:`decode_image` boundary, and
 :func:`extract_features`' byte-histogram featurizer is a documented
 byte-LEVEL contract (oracle-checkable without a codec), not a failed
 decode's fallback.
@@ -818,10 +816,8 @@ def png_resize_nn(assets: DataFrame, box: int = 16) -> DataFrame:
     """REAL image resize: decode PNG → nearest-neighbor sample to the
     aspect-preserving fit-into-``box`` dims (src index = out_index *
     src_dim // out_dim, pure integer math so an oracle can mirror it) →
-    re-encode PNG. The PNG-specialized sibling of the generic
-    :func:`resize_images` (which dispatches every in-container codec
-    format through the same math). Output: (asset_id, out_width,
-    out_height, payload)."""
+    re-encode PNG. Output: (asset_id, out_width, out_height,
+    payload)."""
 
     schema = T.StructType(
         [
@@ -999,24 +995,6 @@ def wav_rms_segments(
     return assets.mapInPandas(segment, schema=schema)
 
 
-def filter_by_metadata(
-    assets: DataFrame,
-    mime_prefix: str | None = None,
-    min_width: int | None = None,
-    max_duration_ms: int | None = None,
-) -> DataFrame:
-    """Metadata-only predicates — plain column filters that push into
-    the scan so payload bytes of rejected assets are never read."""
-    out = assets
-    if mime_prefix is not None:
-        out = out.filter(F.col("mime_type").startswith(mime_prefix))
-    if min_width is not None:
-        out = out.filter(F.col("width") >= min_width)
-    if max_duration_ms is not None:
-        out = out.filter(F.col("duration_ms") <= max_duration_ms)
-    return out
-
-
 def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plumbing: one output row per planned frame
     timestamp (the decode itself is the stubbed step). Demonstrates the
@@ -1030,17 +1008,6 @@ def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
         )
         .select("asset_id", "mime_type", "frame_ts_ms")
     )
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("mime_type", T.StringType()),
-        T.StructField("out_width", T.IntegerType()),
-        T.StructField("out_height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 
 def fit_box_dims(width, height, box: int = 224):
@@ -1057,88 +1024,3 @@ def fit_box_dims(width, height, box: int = 224):
     oh = F.greatest(F.lit(1), F.floor(h * box / longer)).cast("int")
     return ow, oh
 
-
-def resize_images(
-    assets: DataFrame, box: int = 224, allow_stub: bool = False
-) -> DataFrame:
-    """Arrow-batched image resize over binary payloads.
-
-    The decode→resize→re-encode body is REAL for every format
-    :func:`decode_image` handles (PNG, BMP, binary PGM/PPM, baseline
-    JPEG, lossless WebP): decode → nearest-neighbor resample into the
-    aspect-preserving fit-into-``box`` dims (src index = out_index *
-    src_dim // out_dim, the same integer math as
-    :func:`png_resize_nn`) → PNG re-encode. The Spark shape is the
-    production one: iterator-of-batches ``mapInPandas`` (one Arrow
-    batch in flight), the dimension PLAN computed JVM-side before
-    Python (metadata-only consumers never enter the UDF), typed output
-    schema.
-
-    Payloads outside the codec set raise ``NotImplementedError`` (the
-    documented external-codec boundary) unless ``allow_stub=True``
-    explicitly opts into the deterministic byte-slice stand-in — for
-    plumbing tests and formats that need codec libraries this
-    container does not ship. The stub never runs silently.
-
-    Output dims come from the DECODED image, not the metadata plan:
-    a production pipeline treats asset metadata as advisory and the
-    bytes as truth (mismatched rows would otherwise resample on a
-    wrong grid and hide corrupt metadata).
-    """
-    ow, oh = fit_box_dims("width", "height", box)
-    planned = assets.filter(
-        F.col("width").isNotNull() & F.col("height").isNotNull()
-    ).withColumns({"out_width": ow, "out_height": oh})
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "mime_type": [],
-                "out_width": [],
-                "out_height": [],
-                "payload": [],
-            }
-            for aid, mime, payload, pw, ph in zip(
-                pdf["asset_id"],
-                pdf["mime_type"],
-                pdf["payload"],
-                pdf["out_width"],
-                pdf["out_height"],
-            ):
-                raw = b"" if payload is None else bytes(payload)
-                try:
-                    w, h, px = decode_image(raw)
-                except NotImplementedError:
-                    if not allow_stub:
-                        raise
-                    # explicit opt-in: byte-slice stand-in sized by the
-                    # metadata plan, exercising the Arrow plumbing only
-                    k = max(1, int(pw) * int(ph))
-                    out["asset_id"].append(int(aid))
-                    out["mime_type"].append(mime)
-                    out["out_width"].append(int(pw))
-                    out["out_height"].append(int(ph))
-                    out["payload"].append(raw[:k])
-                    continue
-                longer = max(w, h)
-                rw = max(1, w * box // longer)
-                rh = max(1, h * box // longer)
-                ys = (np.arange(rh, dtype=np.int64) * h) // rh
-                xs = (np.arange(rw, dtype=np.int64) * w) // rw
-                out["asset_id"].append(int(aid))
-                out["mime_type"].append(mime)
-                out["out_width"].append(rw)
-                out["out_height"].append(rh)
-                out["payload"].append(encode_png(px[ys][:, xs]))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(out["asset_id"], dtype="int64"),
-                    "mime_type": out["mime_type"],
-                    "out_width": pd.Series(out["out_width"], dtype="int32"),
-                    "out_height": pd.Series(out["out_height"], dtype="int32"),
-                    "payload": out["payload"],
-                }
-            )
-
-    return planned.mapInPandas(_resize, schema=_RESIZE_SCHEMA)

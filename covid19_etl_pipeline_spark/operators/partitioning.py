@@ -61,55 +61,6 @@ def salted_equi_join(
     return out.drop("__salt")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    by: str,
-    buckets: int = 16,
-    sort_by: str | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed table: rows are hash-clustered on
-    ``by`` into ``buckets`` files per partition (optionally sorted
-    within each bucket).
-
-    This is Spark's answer to the reference's SQLite B-tree indices
-    (data_loader.py:163-176) for the JOIN side: two tables bucketed the
-    same way on the join key equi-join WITHOUT a shuffle — at 100 TB
-    that removes the dominant network cost of every fact⋈fact join on
-    the bucket key. ``sort_by`` additionally pre-sorts bucket files so
-    sort-merge join skips its sort phase.
-
-    When ``path`` is given the table is external (data at ``path``);
-    bucketing metadata lives in the catalog either way — plain
-    ``.parquet(path)`` writes cannot carry it.
-    """
-    writer = df.write.mode(mode).bucketBy(buckets, by)
-    if sort_by is not None:
-        writer = writer.sortBy(sort_by)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_equi_join(
-    spark,
-    left_table: str,
-    right_table: str,
-    on: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join two same-bucketed catalog tables on the bucket key.
-
-    With matching bucket counts Catalyst plans a SortMergeJoin whose
-    children are bare bucketed scans — no Exchange on either side
-    (verified by the plan test). This is the co-located join strategy
-    for repeated fact⋈fact joins where neither side broadcasts.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
 #: Row count under which the engine broadcasts a frame it sized itself
 #: (a real ``count()``, never Catalyst's estimate, which is unusable over
 #: Arrow and RDD stages); above it the join is hinted shuffled-hash, so

@@ -3,7 +3,8 @@
 Reference parity:
 - O1/O2 global sorts (data_transformer.py:252, :291; dashboard ORDER BYs)
 - O3 top-k sort+limit (``ORDER BY total_cases DESC LIMIT 50``,
-  dashboard.py:99-100)
+  dashboard.py:99-100): ``orderBy(...).limit(k)``, as in the
+  ``topk_orders`` query
 - O4 client-side nlargest (dashboard.py:187-189) → engine-side top-k
 - O5 most-recent-N-days (dashboard.py:359) → date-range filter form
 
@@ -15,16 +16,8 @@ A bare global ``orderBy`` is a range-partitioned exchange (sampling pass
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
-    """Top-k via sort+limit (TakeOrderedAndProject). Include a unique
-    tie-break column in ``order_by`` for deterministic results."""
-    return df.orderBy(*order_by).limit(k)
 
 
 def most_recent_days(df: DataFrame, date_col: str, days: int) -> DataFrame:

@@ -68,25 +68,6 @@ def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(None))
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features: char/token counts, mean token
-    length, punctuation + stopword ratios. All built-ins, one Project."""
-    toks = tokens(text_col)
-    return df.withColumns(
-        {
-            "n_chars_measured": F.length(F.col(text_col)),
-            "n_tokens": F.size(toks),
-            "mean_token_len": F.when(
-                F.size(toks) > 0,
-                F.aggregate(toks, F.lit(0).cast("double"), lambda acc, t: acc + F.length(t))
-                / F.size(toks),
-            ).otherwise(F.lit(None)),
-            "punct_ratio": punct_ratio(text_col),
-            "stopword_ratio": stopword_ratio(text_col),
-        }
-    )
-
-
 def language_scores(col: Column | str) -> dict[str, Column]:
     """Per-language stopword-hit scores (n-gram-free heuristic: stopword
     coverage is the classic cheap language signal)."""

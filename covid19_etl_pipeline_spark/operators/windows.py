@@ -11,7 +11,7 @@ Reference parity:
 Generalizations the reference implies but lacks (SURVEY §2.5):
 - rank / top-N-per-group via ``row_number`` (the proper form of the
   dashboard's client-side ``nlargest``, dashboard.py:187-189)
-- lag/lead deltas (daily-change series).
+- per-group exponentially weighted moving average (``ewma_by_group``)
 """
 
 from __future__ import annotations
@@ -63,21 +63,6 @@ def top_n_per_group(
     w = Window.partitionBy(*partition_cols).orderBy(*order_by)
     out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n)
     return out if keep_rank else out.drop(rank_col)
-
-
-def with_lag_delta(
-    df: DataFrame,
-    value_col: str,
-    order_col: str,
-    partition_cols: Sequence[str] = (),
-    delta_col: str | None = None,
-) -> DataFrame:
-    """Per-row delta vs previous row (daily-change semantics)."""
-    w = Window.orderBy(order_col)
-    if partition_cols:
-        w = Window.partitionBy(*partition_cols).orderBy(order_col)
-    name = delta_col or f"{value_col}_delta"
-    return df.withColumn(name, F.col(value_col) - F.lag(value_col, 1).over(w))
 
 
 def ewma_by_group(

@@ -186,9 +186,7 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "domain list, range, key uniqueness) evaluated in ONE aggregate "
     "pass — the reference's re-read-and-scan-per-column validators "
     "(S3/debugdb) collapsed into a single job whose cost is "
-    "independent of rule count. The report is rule-count-sized; the "
-    "same Expectation list drives quarantine() for the dead-letter "
-    "split (tested in tests/test_quality.py)",
+    "independent of rule count. The report is rule-count-sized",
 )
 def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_etl_pipeline_spark.quality import (

@@ -300,9 +300,7 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "png_channel_stats). Two independent encode->decode round trips "
     "chained through a geometric transform; the oracle mirrors the "
     "integer NN sampling over the closed-form grid, so a hash match "
-    "pins the resize semantics AND both codec passes. The "
-    "PNG-specialized sibling of the generic resize_images operator, "
-    "which real-decodes every in-container codec format",
+    "pins the resize semantics AND both codec passes",
 )
 def multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_etl_pipeline_spark.operators import multimodal
@@ -680,9 +678,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "metadata half of a resize, computed JVM-side so the plan (and "
     "this oracle) never needs a codec, and metadata-only consumers "
     "never enter the Python stage. The Arrow mapInPandas "
-    "decode->resample->re-encode path is exercised by the "
-    "resize_images operator tests (real codecs by default, byte-slice "
-    "stand-in only behind allow_stub=True); per-asset dimensions derive "
+    "decode->resample->re-encode path is multimodal_png_resize's "
+    "(multimodal.png_resize_nn); per-asset dimensions derive "
     "deterministically from ids so both engines compute identical "
     "plans",
 )

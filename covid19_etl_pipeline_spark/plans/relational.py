@@ -1709,12 +1709,9 @@ def price_extremes_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id
     """,
     "CDC log compaction: collapse an append-only change log to the "
-    "current snapshot — one row per key, the latest by (ts, event_id). "
-    "The batch twin of streaming.joins.latest_per_key (which uses the "
-    "single-pass struct-argmax form); here the window form, one "
-    "shuffle on the key. At 100 TB this is the materialization step "
-    "between a CDC feed and a serving table, run incrementally via "
-    "foreachBatch MERGE (streaming/joins.py)",
+    "current snapshot — one row per key, the latest by (ts, event_id), "
+    "in the window form: one shuffle on the key. At 100 TB this is the "
+    "materialization step between a CDC feed and a serving table",
 )
 def cdc_latest_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -7,23 +7,15 @@ evaluates ALL of them in ONE aggregate pass over the data — the
 Spark-first shape: every rule lowers to a conditional-count expression
 inside a single job, so a 40-rule suite costs the same scan as one.
 
-Two consumption modes:
-- :func:`check_expectations` → a small report DataFrame
-  (rule, n_rows, n_violations, pass) for gating a pipeline run.
-- :func:`quarantine` → (valid, invalid) split where invalid rows carry
-  the list of violated rule names — the dead-letter pattern: bad rows
-  are diverted with diagnosis, good rows flow on, nothing is silently
-  dropped.
+:func:`check_expectations` returns a small report DataFrame (rule,
+n_rows, n_violations, pass) for gating a pipeline run.
 
 Uniqueness is the one rule class that cannot ride the row-local pass
 (it is a property of the whole key space); it lowers to
 count - countDistinct inside the SAME aggregate (Catalyst plans the
-distinct via Expand — still one scan) but cannot be quarantined
-row-locally, so :func:`quarantine` rejects it.
+distinct via Expand — still one scan).
 
-At 100 TB: the report pass is partial-aggregable end to end; the
-quarantine split is two filters over one scan (or one pass + two sinks
-via the pipeline fan-out cache).
+At 100 TB the report pass is partial-aggregable end to end.
 """
 
 from __future__ import annotations
@@ -39,8 +31,8 @@ from pyspark.sql import functions as F
 class Expectation:
     """A named row-level rule: ``predicate`` must hold for every row.
 
-    ``row_local`` marks rules a single row can violate on its own
-    (quarantinable); set False for whole-relation rules (uniqueness).
+    ``row_local`` marks rules a single row can violate on its own; it
+    is False for whole-relation rules (uniqueness).
     """
 
     name: str
@@ -66,14 +58,9 @@ def expect_in(col: str, values: Sequence) -> Expectation:
     return Expectation(f"{col}_in_list", c.isNull() | c.isin(list(values)))
 
 
-def expect_regex(col: str, pattern: str, name: str | None = None) -> Expectation:
-    c = F.col(col)
-    return Expectation(name or f"{col}_matches", c.isNull() | c.rlike(pattern))
-
-
 def expect_unique(col: str) -> Expectation:
     """Whole-relation rule: violations = n_rows - n_distinct (counts
-    every extra copy). Not row-local — quarantine() rejects it."""
+    every extra copy). Not row-local."""
     # predicate is a placeholder; check_expectations special-cases this
     return Expectation(f"{col}_unique", F.lit(True), row_local=False)
 
@@ -116,28 +103,3 @@ def check_expectations(
         .orderBy("expectation")
     )
 
-
-def quarantine(
-    df: DataFrame, expectations: Sequence[Expectation]
-) -> tuple[DataFrame, DataFrame]:
-    """Split rows into (valid, invalid-with-reasons).
-
-    Invalid rows carry ``__violations`` — the array of violated rule
-    names — so the dead-letter sink is self-diagnosing. Raises on
-    non-row-local rules (uniqueness has no single guilty row).
-    """
-    bad = [e.name for e in expectations if not e.row_local]
-    if bad:
-        raise ValueError(f"not row-local, cannot quarantine: {bad}")
-    reasons = F.array_compact(
-        F.array(
-            *[
-                F.when(~e.predicate, F.lit(e.name))
-                for e in expectations
-            ]
-        )
-    )
-    tagged = df.withColumn("__violations", reasons)
-    valid = tagged.filter(F.size("__violations") == 0).drop("__violations")
-    invalid = tagged.filter(F.size("__violations") > 0)
-    return valid, invalid

@@ -56,9 +56,11 @@ def overwrite_table(
     partition_by: tuple[str, ...] = (),
 ) -> str:
     """Truncate-and-append semantics (data_loader.py:252-262) as an
-    atomic overwrite write + view registration."""
-    path = write_parquet(with_audit_column(df), f"{root}/{name}", partition_by=partition_by)
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    atomic overwrite write + view registration. The view's reader is
+    bound to the written schema, so registering it reads no footer."""
+    written = with_audit_column(df)
+    path = write_parquet(written, f"{root}/{name}", partition_by=partition_by)
+    spark.read.schema(written.schema).parquet(path).createOrReplaceTempView(name)
     return path
 
 
@@ -153,38 +155,6 @@ def publish_star_schema(
         )
         for name, (mart, parts) in STAR_FROM_MARTS.items()
     }
-
-
-def publish_masked_view(
-    spark: SparkSession,
-    source_view: str,
-    masked_name: str,
-    hash_cols: tuple[str, ...] = (),
-    null_cols: tuple[str, ...] = (),
-) -> None:
-    """Column-masking governance view: consumers query ``masked_name``
-    while direct identifiers are one-way hashed (joinable surrogate
-    stays, value is gone) and sensitive measures are nulled.
-
-    Views are the enforcement point Spark actually has (no row/column
-    ACLs in open-source Spark) — publish the masked view, grant only it
-    downstream, and the physical table never appears in consumer plans.
-    Masking is an expression in the view definition: zero data rewrite,
-    applied at scan time, pushdown on non-masked columns unaffected.
-    """
-    cols = []
-    base = spark.table(source_view)
-    for f in base.schema.fields:
-        if f.name in hash_cols:
-            cols.append(f"md5(CAST({f.name} AS STRING)) AS {f.name}")
-        elif f.name in null_cols:
-            cols.append(f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}")
-        else:
-            cols.append(f.name)
-    spark.sql(
-        f"CREATE OR REPLACE TEMP VIEW {masked_name} AS "
-        f"SELECT {', '.join(cols)} FROM {source_view}"
-    )
 
 
 def publish_versioned(

@@ -99,67 +99,3 @@ def run_to_memory_sink(
     finally:
         q.stop()
 
-
-def streaming_sliding_rollup(
-    events: DataFrame,
-    watermark: str = "1 day",
-    window_size: str = "6 hours",
-    slide: str = "3 hours",
-) -> DataFrame:
-    """Sliding-window rollup over a streaming events DataFrame —
-    completes the window family (tumbling: ``streaming_daily_rollup``,
-    session: ``streaming.stateful.streaming_session_rollup``).
-
-    Each event lands in window_size/slide overlapping windows; Spark
-    plans this as an Expand (one output row per covering window) before
-    the windowed aggregation, the same physical shape as the batch
-    `sliding_window_rollup` query. State is bounded by the watermark:
-    windows whose end < max(event time) - watermark are finalized and
-    evicted.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_size, slide).alias("w"))
-        .agg(
-            F.sum("value").alias("total_value"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "total_value",
-            "n_events",
-        )
-    )
-
-
-def streaming_distinct_users_rollup(
-    events: DataFrame,
-    watermark: str = "1 day",
-    window_size: str = "1 day",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Tumbling-window DISTINCT-user cardinality over a stream, via the
-    HyperLogLog sketch (``approx_count_distinct``).
-
-    Exact streaming distinct would need per-window per-key state
-    proportional to the number of distinct users; the HLL sketch is a
-    fixed-size mergeable register array, so state per window is O(KB)
-    no matter how many users flow through — the only viable shape for
-    a 100 TB/day stream. Merge order across micro-batches doesn't
-    affect the estimate (register-wise max), so streaming == batch on
-    the same data, which is exactly what the parity test asserts.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_size).alias("w"))
-        .agg(
-            F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.col("w.start").cast("date").alias("event_date"),
-            "approx_users",
-            "n_events",
-        )
-    )

@@ -1,18 +1,14 @@
 """Stateful streaming operators (SURVEY §2.9 — absent from the
 reference, engine extension per §7.2 step 9).
 
-Two custom stateful shapes beyond the tumbling-window rollup:
+Two stateful shapes beyond the tumbling-window rollup:
 
 - ``session_rollup``: built-in ``session_window`` (dynamic-gap session
   aggregation). Works on BOTH batch and streaming DataFrames — the
   batch form doubles as the oracle for the streaming form, and as a
   cross-check against the lag/cumsum ``sessionize`` registry query.
-- ``stateful_running_totals``: ``applyInPandasWithState`` — the
-  arbitrary-stateful-processing escape hatch for semantics no built-in
-  window expresses (here: monotone per-user lifetime counters emitted
-  on every update). State is per-key and partition-local, so it scales
-  horizontally with the number of users; Arrow batches keep the
-  Python-side transfer vectorized.
+- ``streaming_dedup``: keyed deduplication whose per-key state the
+  watermark evicts.
 
 At 100 TB/day the difference between these and the reference's daily
 full recompute (dags/covid_pipeline_dag.py:101) is incremental state
@@ -21,32 +17,12 @@ update vs full rescan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 #: Session gap: two events of one user closer than this belong to one
 #: session (mirrors the batch `sessionize` registry query's 30-min gap).
 DEFAULT_GAP = "30 minutes"
-
-RUNNING_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
 
 
 def session_rollup(events: DataFrame, gap: str = DEFAULT_GAP) -> DataFrame:
@@ -80,41 +56,6 @@ def streaming_session_rollup(
     return session_rollup(events.withWatermark("ts", watermark), gap=gap)
 
 
-def _update_running_totals(
-    key: tuple,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Fold each micro-batch into (n_events, total_value) state and emit
-    the updated lifetime totals for this key."""
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def stateful_running_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user lifetime event count + value
-    sum, re-emitted on every micro-batch that touches the user.
-
-    ``applyInPandasWithState`` keys state by user_id; no timeout — the
-    counters are lifetime-monotone (a TTL variant would pass
-    ``GroupStateTimeout.ProcessingTimeTimeout`` and call
-    ``state.setTimeoutDuration``).
-    """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_running_totals,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_dedup(
     events: DataFrame,
     keys: tuple[str, ...] = ("event_id",),
@@ -136,58 +77,3 @@ def streaming_dedup(
         list(keys)
     )
 
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` processor: per-user lifetime
-    counters in a typed ValueState cell — the Spark-4-native successor
-    to the ``applyInPandasWithState`` form above (RocksDB-backed state,
-    typed state primitives, timer support). Kept semantically identical
-    to ``stateful_running_totals`` so the two APIs cross-check each
-    other in tests.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("totals", "n long, total double")
-
-    def handleInputRows(self, key, rows, timerValues):
-        prior = self._state.get() if self._state.exists() else None
-        n, total = (prior[0], prior[1]) if prior is not None else (0, 0.0)
-        for pdf in rows:
-            n += int(len(pdf))
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_running_totals_v2(events: DataFrame) -> DataFrame:
-    """Per-user lifetime event count + value sum via
-    ``transformWithStateInPandas`` (Spark 4 arbitrary stateful API).
-
-    Requires the RocksDB state store provider (set by the caller's
-    session or the test fixture) — typed ValueState replaces the
-    struct-tuple GroupState, and the same processor can register
-    timers for TTL eviction (not needed for monotone counters).
-
-    Environment note: the transformWithState state-server protocol
-    needs ``google.protobuf``, which this container does not ship — the
-    parity test skips where absent (the same gating policy as the
-    multimodal image codec); ``stateful_running_totals`` is the
-    protobuf-free equivalent on the older API.
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

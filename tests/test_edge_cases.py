@@ -94,17 +94,6 @@ def test_salted_join_left_preserves_unmatched(spark):
     assert by_k[1] == "dim" and by_k[9] is None
 
 
-def test_latest_per_key_single_and_tied_rows(spark):
-    from covid19_etl_pipeline_spark.streaming.joins import latest_per_key
-
-    df = spark.createDataFrame(
-        [(1, 10, "a"), (1, 10, "b"), (2, 5, "c")], ["k", "ts", "payload"]
-    )
-    out = {r["k"]: r["payload"] for r in latest_per_key(df, "k", ("ts",)).collect()}
-    # tie on ts resolved by lexicographic max over remaining payload
-    assert out == {1: "b", 2: "c"}
-
-
 def test_pack_sequences_invariants(spark):
     """Packing is a partition of the corpus: every doc lands in exactly
     one bin, bins never exceed budget + one straddling doc, and the

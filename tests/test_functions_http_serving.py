@@ -7,31 +7,16 @@ from unittest.mock import patch
 
 from pyspark.sql import functions as F
 
-from covid19_etl_pipeline_spark.functions.scalars import (
-    humanize_number,
-    pct,
-    per_capita,
-    safe_div,
-)
+from covid19_etl_pipeline_spark.functions.scalars import humanize_number
 from covid19_etl_pipeline_spark.pipeline import run_transform_fanout
 from covid19_etl_pipeline_spark.serving import publish_star_schema
 from covid19_etl_pipeline_spark.sources import http
 
 
 def test_scalar_helpers(spark):
-    df = spark.createDataFrame(
-        [(10.0, 1000.0, 1_000_000.0), (5.0, 0.0, 1234.0), (None, None, None)],
-        ["deaths", "cases", "pop"],
-    )
-    out = df.select(
-        safe_div("deaths", "cases").alias("sd"),
-        pct("deaths", "cases").alias("p"),
-        per_capita("deaths", "pop").alias("pc"),
-        humanize_number("pop").alias("h"),
-    ).collect()
-    assert out[0]["sd"] == 0.01 and out[0]["p"] == 1.0 and out[0]["pc"] == 1.0
+    df = spark.createDataFrame([(1_000_000.0,), (1234.0,), (None,)], ["pop"])
+    out = df.select(humanize_number("pop").alias("h")).collect()
     assert out[0]["h"] == "1.00M"
-    assert out[1]["sd"] is None and out[1]["p"] is None
     assert out[1]["h"] == "1.23K"
     assert out[2]["h"] is None
 
@@ -125,6 +110,40 @@ def test_publish_star_schema_and_query(spark, tmp_path):
     assert "created_at" in spark.table("covid_cases").columns
     # fact is year-partitioned on disk
     assert any(p.name == "year=2021" for p in (tmp_path / "covid_cases").iterdir())
+
+
+def test_overwrite_table_registers_view_without_a_job(spark, tmp_path, monkeypatch):
+    """The view ``overwrite_table`` registers is bound to the schema it
+    just wrote: registering it reads no parquet footer, so no job runs
+    between the write and the return. The view still reads what a
+    schema-inferring read of the directory does, partition column
+    last."""
+    from covid19_etl_pipeline_spark import serving
+
+    sc = spark.sparkContext
+    group = "overwrite-table-view"
+    write = serving.write_parquet
+
+    def write_then_tag(*args, **kwargs):
+        path = write(*args, **kwargs)
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        return path
+
+    monkeypatch.setattr(serving, "write_parquet", write_then_tag)
+    df = spark.createDataFrame(
+        [(1, 2020, "a"), (2, 2021, "b"), (3, 2021, None)], "id long, year int, v string"
+    )
+    try:
+        path = serving.overwrite_table(spark, df, "t_overwrite_view", str(tmp_path), ("year",))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    view, inferred = spark.table("t_overwrite_view"), spark.read.parquet(path)
+    assert view.columns == inferred.columns == ["id", "v", "created_at", "year"]
+    assert view.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(view).count() == 0
 
 
 def test_jdbc_sink_round_trip(spark, tmp_path):
@@ -260,53 +279,6 @@ processing:
     assert (tmp_path / "o" / "serving" / "covid_cases").exists()
 
 
-def test_write_parquet_bloom_annotates_files(spark, tmp_path):
-    """Bloom-filtered files carry the filter bytes: same data written
-    with blooms is measurably larger than without (pyarrow here does
-    not expose the bloom offset, so size delta is the observable)."""
-    import glob
-    import os
-
-    from covid19_etl_pipeline_spark.sources.io import write_parquet_bloom
-
-    df = spark.range(20000).selectExpr("id AS k", "CAST(id AS STRING) AS s")
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloom")
-    df.coalesce(1).write.parquet(plain)
-    write_parquet_bloom(df.coalesce(1), bloomed, ["k"], expected_ndv=20000)
-    size = lambda d: sum(
-        os.path.getsize(f) for f in glob.glob(d + "/*.parquet")
-    )
-    assert size(bloomed) > size(plain) + 10_000  # filter bytes present
-    assert spark.read.parquet(bloomed).count() == 20000
-
-
-def test_publish_masked_view_hashes_and_nulls(spark, sf_dir):
-    """Masked view: hashed identifier stays joinable (same input, same
-    surrogate), nulled measure is gone, other columns untouched."""
-    from covid19_etl_pipeline_spark.serving import publish_masked_view
-
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
-        "cust_raw"
-    )
-    publish_masked_view(
-        spark, "cust_raw", "cust_masked",
-        hash_cols=("c_name",), null_cols=("c_acctbal",),
-    )
-    masked = spark.table("cust_masked")
-    assert set(masked.columns) == set(spark.table("cust_raw").columns)
-    rows = masked.orderBy("c_custkey").limit(2).collect()
-    raw = spark.table("cust_raw").orderBy("c_custkey").limit(2).collect()
-    import hashlib
-
-    assert rows[0]["c_name"] == hashlib.md5(raw[0]["c_name"].encode()).hexdigest()
-    assert rows[0]["c_acctbal"] is None
-    assert rows[0]["c_mktsegment"] == raw[0]["c_mktsegment"]
-    # surrogate is deterministic: same name in two reads -> same hash
-    assert rows[0]["c_name"] == masked.filter(
-        masked.c_custkey == raw[0]["c_custkey"]
-    ).first()["c_name"]
-
-
 def test_versioned_publish_pointer_swap_and_rollback(spark, sf_dir, tmp_path):
     """Two publishes: readers follow _CURRENT to v2; rollback repoints
     to v1 with zero data movement; unknown rollback target raises."""
@@ -357,14 +329,12 @@ def test_cached_query_ttl_hit_and_expiry(spark, sf_dir, tmp_path):
 
 
 def test_governed_publication_capstone(spark, sf_dir, tmp_path):
-    """Round-2 serving capstone — the governed publication chain end to
-    end: versioned publish with atomic pointer -> masked consumer view
-    over the CURRENT version -> TTL-cached query on the masked view ->
-    rollback flips what every downstream layer sees, with zero data
-    movement."""
+    """The governed publication chain end to end: versioned publish with
+    atomic pointer -> consumer view over the CURRENT version ->
+    TTL-cached query on the view -> rollback flips what every
+    downstream layer sees, with zero data movement."""
     from covid19_etl_pipeline_spark.serving import (
         cached_query,
-        publish_masked_view,
         publish_versioned,
         read_current,
         rollback_version,
@@ -377,15 +347,8 @@ def test_governed_publication_capstone(spark, sf_dir, tmp_path):
     publish_versioned(spark, cust, "dim_customer", root, "v1")
     publish_versioned(spark, cust.limit(100), "dim_customer", root, "v2")
 
-    read_current(spark, "dim_customer", root).createOrReplaceTempView("cust_cur")
-    publish_masked_view(
-        spark, "cust_cur", "cust_gov",
-        hash_cols=("c_name",), null_cols=("c_acctbal",),
-    )
-    gov = spark.table("cust_gov")
-    assert gov.count() == 100                      # consumers see v2
-    assert gov.filter(gov.c_acctbal.isNotNull()).count() == 0
-    assert gov.first()["c_name"] not in {r["c_name"] for r in cust.limit(1).collect()}
+    read_current(spark, "dim_customer", root).createOrReplaceTempView("cust_gov")
+    assert spark.table("cust_gov").count() == 100  # consumers see v2
 
     # TTL cache serves the governed result; rollback + re-registration
     # changes the physical data, the stale snapshot still serves until
@@ -395,11 +358,7 @@ def test_governed_publication_capstone(spark, sf_dir, tmp_path):
     ).first()["n"]
     assert n1 == 100
     rollback_version("dim_customer", root, "v1")
-    read_current(spark, "dim_customer", root).createOrReplaceTempView("cust_cur")
-    publish_masked_view(
-        spark, "cust_cur", "cust_gov",
-        hash_cols=("c_name",), null_cols=("c_acctbal",),
-    )
+    read_current(spark, "dim_customer", root).createOrReplaceTempView("cust_gov")
     assert spark.table("cust_gov").count() == cust.count()  # live view: v1
     n_cached = cached_query(
         spark, "SELECT count(*) AS n FROM cust_gov", cache

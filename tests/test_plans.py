@@ -83,43 +83,6 @@ def test_no_python_udfs_in_plans(spark, name):
     assert "EvalPython" not in plan
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Same-bucketed tables must equi-join with NO Exchange on either
-    side (the co-located join path — at scale this removes the shuffle
-    entirely); results must match the plain join."""
-    from pyspark.sql import functions as F
-
-    from covid19_etl_pipeline_spark.catalog import load_table
-    from covid19_etl_pipeline_spark.operators.partitioning import (
-        bucketed_equi_join,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, SF, "orders")
-    li = load_table(spark, SF, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-    write_bucketed(orders, "t_orders_b", by="o_orderkey", buckets=4,
-                   sort_by="o_orderkey", path=str(tmp_path / "ob"))
-    write_bucketed(li, "t_lineitem_b", by="o_orderkey", buckets=4,
-                    sort_by="o_orderkey", path=str(tmp_path / "lb"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the shuffle-join path so the assertion is about bucketing,
-        # not broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_equi_join(spark, "t_orders_b", "t_lineitem_b", on="o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert "Bucketed: true" in plan
-        got = joined.groupBy().agg(F.count("*").alias("n")).first()["n"]
-        expected = orders.join(li, on="o_orderkey").count()
-        assert got == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
 def test_q3_shape_pushdown_and_topk(spark):
     """TPC-H Q3 shape: segment filter reaches the customer scan; the
     top-10 is a TakeOrderedAndProject, not a global sort."""

@@ -1,18 +1,15 @@
-"""Declarative expectations: one-pass report + quarantine split."""
+"""Declarative expectations: the one-pass report."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from covid19_etl_pipeline_spark.quality import (
     check_expectations,
     expect_between,
     expect_in,
     expect_not_null,
-    expect_regex,
     expect_unique,
-    quarantine,
 )
 
 
@@ -20,13 +17,13 @@ from covid19_etl_pipeline_spark.quality import (
 def frame(spark):
     return spark.createDataFrame(
         [
-            (1, "US", 10.0, "a@x.io"),
-            (2, "DE", -5.0, "b@x.io"),      # balance out of range
-            (3, None, 20.0, "not-an-email"),  # null country + bad email
-            (4, "FR", 30.0, None),           # null email passes regex (orthogonal)
-            (4, "US", 40.0, "d@x.io"),       # duplicate id
+            (1, "US", 10.0),
+            (2, "DE", -5.0),   # balance out of range
+            (3, None, 20.0),   # null country
+            (4, "FR", 30.0),
+            (4, "US", 40.0),   # duplicate id
         ],
-        ["id", "country", "balance", "email"],
+        ["id", "country", "balance"],
     )
 
 
@@ -36,7 +33,6 @@ def _rules():
         expect_not_null("country"),
         expect_between("balance", 0.0, 100.0),
         expect_in("country", ["US", "DE", "FR"]),
-        expect_regex("email", r"^[^@]+@[^@]+$"),
         expect_unique("id"),
     ]
 
@@ -47,7 +43,6 @@ def test_report_counts(spark, frame):
     assert rep["country_not_null"]["n_violations"] == 1
     assert rep["balance_between_0.0_100.0"]["n_violations"] == 1
     assert rep["country_in_list"]["n_violations"] == 0  # null passes (orthogonal)
-    assert rep["email_matches"]["n_violations"] == 1    # null passes
     assert rep["id_unique"]["n_violations"] == 1        # one extra copy
     assert rep["id_unique"]["passed"] is False
     assert rep["country_in_list"]["passed"] is True
@@ -61,61 +56,3 @@ def test_report_is_single_job(spark, frame):
     # one scan per report row would show many ExistingRDD scans; union
     # of projections over ONE aggregated row shows exactly one
     assert plan.count("HashAggregate") <= 4  # partial+final (+ distinct Expand stages)
-
-
-def test_quarantine_split(spark, frame):
-    row_local = [e for e in _rules() if e.row_local]
-    valid, invalid = quarantine(frame, row_local)
-    assert valid.count() == 3  # rows 1, 4(null email ok), 4-dup
-    bad = {r["id"]: set(r["__violations"]) for r in invalid.collect()}
-    assert bad[2] == {"balance_between_0.0_100.0"}
-    assert bad[3] == {"country_not_null", "email_matches"}
-
-
-def test_quarantine_rejects_relation_rules(spark, frame):
-    with pytest.raises(ValueError, match="not row-local"):
-        quarantine(frame, _rules())
-
-
-def test_schema_contract(spark):
-    from pyspark.sql import types as T
-
-    from covid19_etl_pipeline_spark.sources.io import assert_schema
-
-    df = spark.createDataFrame([(1, "x", 2.0)], ["id", "name", "score"])
-    expected = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    assert assert_schema(df, expected) is df  # additive extra column ok
-
-    with pytest.raises(ValueError, match="unexpected columns"):
-        assert_schema(df, expected, strict=True)
-
-    retyped = T.StructType([T.StructField("id", T.StringType())])
-    with pytest.raises(ValueError, match="expected string, got bigint"):
-        assert_schema(df, retyped)
-
-    missing = T.StructType([T.StructField("absent", T.LongType())])
-    with pytest.raises(ValueError, match="missing column absent"):
-        assert_schema(df, missing)
-
-
-def test_manifest_round_trip(spark, tmp_path):
-    from covid19_etl_pipeline_spark.sources.io import (
-        verify_manifest,
-        write_with_manifest,
-    )
-
-    df = spark.range(100).withColumn("part", (F.col("id") % 3).cast("int"))
-    m = write_with_manifest(df, str(tmp_path / "t"), partition_by=("part",))
-    assert m["n_rows"] == 100
-    assert verify_manifest(spark, str(tmp_path / "t"))
-
-    # tamper: republish different data under the same manifest
-    spark.range(99).withColumn("part", (F.col("id") % 3).cast("int")).write.mode(
-        "overwrite"
-    ).partitionBy("part").parquet(str(tmp_path / "t2"))
-    import shutil
-
-    shutil.copy(tmp_path / "t" / "_manifest.json", tmp_path / "t2" / "_manifest.json")
-    assert not verify_manifest(spark, str(tmp_path / "t2"))

@@ -6,17 +6,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid19_etl_pipeline_spark.catalog import load_table, register_tables, table_stats
-from covid19_etl_pipeline_spark.operators.multimodal import (
-    extract_features,
-    filter_by_metadata,
-    frame_sample_plan,
-)
-from covid19_etl_pipeline_spark.sources.io import (
-    read_csv,
-    read_parquet,
-    validate_source,
-    write_parquet,
-)
+from covid19_etl_pipeline_spark.operators.multimodal import extract_features, frame_sample_plan
+from covid19_etl_pipeline_spark.sources.io import read_csv, validate_source, write_parquet
 from covid19_etl_pipeline_spark.streaming.daily_rollup import (
     read_events_stream,
     run_to_memory_sink,
@@ -58,7 +49,7 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     )
     out = str(tmp_path / "pq")
     write_parquet(df, out, partition_by=("year",))
-    back = read_parquet(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == 3
     # partition pruning: only the year=2021 directory is scanned
     pruned = back.filter(F.col("year") == 2021)
@@ -126,11 +117,8 @@ def test_multimodal_feature_extraction(spark):
     assert again[1]["features"] == by_id[1]["features"]
 
 
-def test_multimodal_metadata_filters_and_frames(spark):
-    assets = _assets(spark)
-    assert filter_by_metadata(assets, mime_prefix="image/").count() == 2
-    assert filter_by_metadata(assets, min_width=640).count() == 2
-    frames = frame_sample_plan(assets, every_ms=1000).collect()
+def test_multimodal_frame_sample_plan(spark):
+    frames = frame_sample_plan(_assets(spark), every_ms=1000).collect()
     # 3500ms video at 1fps → frames at 0,1000,2000,3000
     assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
 
@@ -350,43 +338,11 @@ def test_png_resize_nn_and_stats(spark):
     assert [r["sum_value"] for r in rows] == [v * 16 * 8 for v in (7, 200, 55)]
 
 
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    """JSON-lines sink/source round-trip with explicit schema; values,
-    including nested arrays, must survive."""
-    from covid19_etl_pipeline_spark.sources.io import read_json, write_json
-
-    df = spark.createDataFrame(
-        [(1, "a", [1.5, 2.5]), (2, "b", []), (3, None, None)],
-        "id long, name string, vals array<double>",
-    )
-    out = str(tmp_path / "j")
-    write_json(df, out)
-    back = read_json(spark, out, schema=df.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_json_partitioned_write_prunes(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from covid19_etl_pipeline_spark.sources.io import read_json, write_json
-
-    df = spark.createDataFrame([(1, 2020), (2, 2021), (3, 2021)], "id long, year int")
-    out = str(tmp_path / "jp")
-    write_json(df, out, partition_by=("year",))
-    back = read_json(spark, out, schema="id long, year int")
-    pruned = back.filter(F.col("year") == 2021)
-    assert pruned.count() == 2
-    files = pruned.select(F.input_file_name().alias("f")).distinct().collect()
-    assert all("year=2021" in r["f"] for r in files)
-
-
 def test_csv_write_roundtrip(spark, tmp_path):
-    from covid19_etl_pipeline_spark.sources.io import read_csv, write_csv
-
     df = spark.createDataFrame([(1, "a"), (2, "b,with comma"), (3, None)],
                                "id long, name string")
     out = str(tmp_path / "c")
-    write_csv(df, out)
+    df.write.option("header", "true").csv(out)
     back = read_csv(spark, out, schema=df.schema)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
@@ -407,22 +363,6 @@ def test_load_table_pins_utc(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", old)
 
 
-def test_read_parquet_merged_schema_evolution(spark, tmp_path):
-    """Old files lack the new column; merged read unions the schemas
-    and backfills nulls."""
-    from covid19_etl_pipeline_spark.sources.io import read_parquet_merged
-
-    out = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, v1 string").write.parquet(out)
-    spark.createDataFrame([(2, "b", 9.5)], "id long, v1 string, v2 double").write.mode(
-        "append"
-    ).parquet(out)
-    back = read_parquet_merged(spark, out)
-    assert set(back.columns) == {"id", "v1", "v2"}
-    rows = {r["id"]: (r["v1"], r["v2"]) for r in back.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     from covid19_etl_pipeline_spark.sources.io import compact_parquet
 
@@ -437,182 +377,6 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 1000
     assert back.agg(F.sum("v")).first()[0] == 2 * sum(range(1000))
-
-
-def test_write_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):
-    """Range-clustered files must carry near-disjoint min/max footer
-    stats on the cluster column — the property that makes scans skip
-    files. Verified from the parquet footers directly."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from covid19_etl_pipeline_spark.sources.io import write_clustered
-
-    orders = load_table(spark, sf_dir, "orders")
-    out = str(tmp_path / "clustered")
-    write_clustered(orders, out, ["o_totalprice"], num_files=4)
-
-    ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(out, f))
-        col_idx = md.schema.names.index("o_totalprice")
-        lo = min(md.row_group(i).column(col_idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(col_idx).statistics.max for i in range(md.num_row_groups))
-        ranges.append((lo, hi))
-    assert len(ranges) == 4
-    ranges.sort()
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b   # disjoint (range partitioner boundaries)
-    # rows survive
-    assert spark.read.parquet(out).count() == orders.count()
-
-
-def test_streaming_sliding_rollup_matches_batch(spark, sf_dir, tmp_path):
-    """Sliding windows overlap (6h window, 3h slide) — the streamed
-    result must agree with the batch F.window aggregation bucket-for-
-    bucket, including events counted in two windows."""
-    from covid19_etl_pipeline_spark.streaming.daily_rollup import (
-        streaming_sliding_rollup,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "events_sliding")
-    write_parquet(events, src)
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=2)
-    run_to_memory_sink(streaming_sliding_rollup(stream), query_name="s_stream")
-    got = {
-        (r["window_start"], r["window_end"]): (round(r["total_value"], 4), r["n_events"])
-        for r in spark.sql("SELECT * FROM s_stream").collect()
-    }
-    expected = {
-        (r["w"]["start"], r["w"]["end"]): (round(r["tv"], 4), r["n"])
-        for r in events.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"))
-        .agg(F.sum("value").alias("tv"), F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == expected
-    # every event is in exactly two overlapping 6h/3h windows
-    assert sum(v[1] for v in got.values()) == 2 * events.count()
-
-
-def test_streaming_distinct_users_matches_batch_and_exact(spark, sf_dir, tmp_path):
-    """HLL sketch state merges register-wise (order-insensitive), so the
-    streaming per-window estimate must EQUAL the batch
-    approx_count_distinct on the same data — and both must sit within
-    the 5% contract of the exact distinct count."""
-    from covid19_etl_pipeline_spark.streaming.daily_rollup import (
-        read_events_stream,
-        run_to_memory_sink,
-        streaming_distinct_users_rollup,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "events_stream_hll")
-    write_parquet(events, src)
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=2)
-    run_to_memory_sink(
-        streaming_distinct_users_rollup(stream), query_name="t_stream_hll"
-    )
-    got = {
-        r["event_date"]: (r["approx_users"], r["n_events"])
-        for r in spark.sql("SELECT * FROM t_stream_hll").collect()
-    }
-    batch = {
-        r["event_date"]: (r["au"], r["n"])
-        for r in events.groupBy(F.to_date("ts").alias("event_date"))
-        .agg(
-            F.approx_count_distinct("user_id", rsd=0.05).alias("au"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    }
-    assert got == batch
-    exact = {
-        r["event_date"]: r["x"]
-        for r in events.groupBy(F.to_date("ts").alias("event_date"))
-        .agg(F.countDistinct("user_id").alias("x"))
-        .collect()
-    }
-    for d, (au, _) in got.items():
-        assert abs(au - exact[d]) <= max(1, 0.05 * exact[d]) + 2
-
-
-def test_orc_roundtrip_partitioned(spark, sf_dir, tmp_path):
-    """ORC sink/scan round-trip with a partitioned layout; partition
-    pruning works like parquet (one directory read)."""
-    from covid19_etl_pipeline_spark.sources.io import read_orc, write_orc
-
-    nation = load_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(nation, path, partition_by=("n_regionkey",))
-    back = read_orc(spark, path)
-    assert back.count() == nation.count()
-    assert {r["n_name"] for r in back.collect()} == {
-        r["n_name"] for r in nation.collect()
-    }
-    one = back.filter(F.col("n_regionkey") == 0)
-    files = {r[0] for r in one.select(F.input_file_name()).distinct().collect()}
-    assert files and all("n_regionkey=0" in f for f in files)
-
-
-def test_text_lines_roundtrip(spark, tmp_path):
-    """Text sink requires one string column; the scan reads one row per
-    line in any order."""
-    from covid19_etl_pipeline_spark.sources.io import (
-        read_text_lines,
-        write_text_lines,
-    )
-
-    lines = ["alpha beta", "gamma", "delta epsilon zeta"]
-    df = spark.createDataFrame([(l,) for l in lines], "value string")
-    path = str(tmp_path / "corpus_txt")
-    write_text_lines(df, path)
-    back = read_text_lines(spark, path)
-    assert sorted(r["value"] for r in back.collect()) == sorted(lines)
-
-
-def test_streaming_parquet_sink_exactly_once_across_restart(spark, sf_dir, tmp_path):
-    """Stop the checkpointed file-sink query, add more input, restart
-    with the SAME checkpoint: the second run picks up only unprocessed
-    files, and the final output has every input row exactly once."""
-    from covid19_etl_pipeline_spark.streaming.daily_rollup import read_events_stream
-    from covid19_etl_pipeline_spark.streaming.sinks import stream_to_parquet
-
-    events = load_table(spark, sf_dir, "events")
-    half1 = events.filter(F.col("event_id") % 2 == 0)
-    half2 = events.filter(F.col("event_id") % 2 == 1)
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    half1.repartition(3).write.mode("append").parquet(src)
-    stream = read_events_stream(spark, src, max_files_per_trigger=2)
-    proj = stream.select("event_id", "user_id", "event_type")
-    q = stream_to_parquet(proj, out, ckpt, query_name="t_pq_sink_1")
-    q.processAllAvailable()
-    q.stop()
-    first = spark.read.parquet(out).count()
-    assert first == half1.count()
-
-    half2.repartition(3).write.mode("append").parquet(src)
-    q2 = stream_to_parquet(
-        read_events_stream(spark, src, max_files_per_trigger=2).select(
-            "event_id", "user_id", "event_type"
-        ),
-        out,
-        ckpt,
-        query_name="t_pq_sink_2",
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    got = spark.read.parquet(out)
-    assert got.count() == events.count()                  # no loss
-    assert got.select("event_id").distinct().count() == events.count()  # no dupes
 
 
 def test_write_zordered_skips_files_on_both_dims(spark, sf_dir, tmp_path):
@@ -664,62 +428,6 @@ def test_observe_quality_rides_the_action(spark):
     observed, obs = observe_quality(df, columns=["v"])
     assert observed.count() == 4
     assert obs.get == {"n_rows": 4, "null_v": 2}
-
-
-def test_sharded_url_source_parallel_read(spark, tmp_path):
-    """Python Data Source (Spark 4): one task per URL shard, fetch runs
-    executor-side; file:// exercises the same code path hermetically."""
-    from covid19_etl_pipeline_spark.sources.pyds import read_sharded_urls
-
-    f1, f2 = tmp_path / "a.txt", tmp_path / "b.txt"
-    f1.write_text("alpha\nbeta\n")
-    f2.write_text("gamma\n")
-    urls = [f1.as_uri(), f2.as_uri()]
-    df = read_sharded_urls(spark, urls)
-    assert df.rdd.getNumPartitions() == 2  # one shard per URL
-    rows = {(r["shard"], r["line"]) for r in df.collect()}
-    assert rows == {(0, "alpha"), (0, "beta"), (1, "gamma")}
-    assert set(df.columns) == {"shard", "url", "line"}
-
-
-def test_sharded_url_fetch_retries_with_backoff(tmp_path):
-    """The in-partition fetch honors the reference retry contract:
-    N attempts, 2**attempt backoff, raises after exhaustion."""
-    import pytest
-
-    from covid19_etl_pipeline_spark.sources.pyds import _fetch_with_retry
-
-    sleeps = []
-    with pytest.raises(Exception):
-        _fetch_with_retry(
-            (tmp_path / "missing.txt").as_uri(),
-            retries=3,
-            timeout=1,
-            sleep=sleeps.append,
-        )
-    assert sleeps == [1, 2]  # 2**0, 2**1; no sleep after the last attempt
-
-    ok = tmp_path / "ok.txt"
-    ok.write_text("payload")
-    assert _fetch_with_retry(ok.as_uri(), retries=1, timeout=1) == "payload"
-
-
-def test_read_parquet_resilient_skips_corrupt_file(spark, sf_dir, tmp_path):
-    """A garbage .parquet object in the directory is skipped (file-level
-    drop), and the surviving rows still read; the strict reader fails."""
-    import pytest
-
-    from covid19_etl_pipeline_spark.sources.io import read_parquet_resilient
-
-    out = str(tmp_path / "res")
-    spark.read.parquet(f"{sf_dir}/nation.parquet").write.parquet(out)
-    (tmp_path / "res" / "part-corrupt.parquet").write_bytes(b"not a parquet file")
-
-    good = read_parquet_resilient(spark, out)
-    assert good.count() == 25
-
-    with pytest.raises(Exception):
-        spark.read.parquet(out).count()
 
 
 def test_dynamic_partition_overwrite_replaces_only_landed(spark, sf_dir, tmp_path):

@@ -1,5 +1,5 @@
-"""Stateful streaming: session windows + applyInPandasWithState
-(SURVEY §2.9 extension surface).
+"""Stateful streaming: session windows, stream-stream joins and
+deduplication (SURVEY §2.9 extension surface).
 
 The batch form of ``session_rollup`` is checked against an independent
 pandas re-derivation; the streaming forms are checked against their
@@ -11,19 +11,13 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
-
 import pandas as pd
 from pyspark.sql import functions as F
 
 from covid19_etl_pipeline_spark.catalog import load_table
 from covid19_etl_pipeline_spark.sources.io import write_parquet
 from covid19_etl_pipeline_spark.streaming.daily_rollup import EVENTS_SCHEMA
-from covid19_etl_pipeline_spark.streaming.stateful import (
-    session_rollup,
-    stateful_running_totals,
-    streaming_session_rollup,
-)
+from covid19_etl_pipeline_spark.streaming.stateful import session_rollup, streaming_session_rollup
 
 GAP = pd.Timedelta(minutes=30)
 
@@ -75,21 +69,16 @@ def test_batch_session_rollup_matches_pandas_oracle(spark, sf_dir):
     assert got == expected
 
 
-def _stage_stream_dir(spark, df, tmp_path, name, n_files=1, chrono=False):
+def _stage_stream_dir(spark, df, tmp_path, name, n_files=1):
     """Write `df` as exactly `n_files` parquet files into the staging
     area and copy them into the stream dir with increasing mtimes so the
-    file source picks them up in a deterministic order. ``chrono``
-    range-partitions on ts so micro-batches arrive in event-time order
-    (how a real stream behaves)."""
+    file source picks them up in a deterministic order."""
     stream_dir = tmp_path / name
     stream_dir.mkdir(exist_ok=True)
     stage = tmp_path / f"_stage_{name}_{len(os.listdir(stream_dir))}"
     # repartition (not coalesce): the source may have fewer partitions
     # than n_files, and coalesce can only shrink
-    parted = (
-        df.repartitionByRange(n_files, "ts") if chrono else df.repartition(n_files)
-    )
-    write_parquet(parted, str(stage))
+    write_parquet(df.repartition(n_files), str(stage))
     t = 1_700_000_000 + len(os.listdir(stream_dir)) * 10
     for i, f in enumerate(sorted(p for p in os.listdir(stage) if p.endswith(".parquet"))):
         dst = stream_dir / f"{len(os.listdir(stream_dir)):03d}.parquet"
@@ -152,41 +141,6 @@ def test_streaming_session_rollup_matches_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_stateful_running_totals_matches_batch(spark, sf_dir, tmp_path):
-    """applyInPandasWithState lifetime counters: the last update emitted
-    per user (the one with the max n_events) must equal the batch
-    groupBy totals, even with the input split across micro-batches."""
-    ev = _events(spark, sf_dir, max_user=8)
-    src = _stage_stream_dir(spark, ev, tmp_path, "totals", n_files=3)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    _drain(stateful_running_totals(stream), "t_totals", "update")
-
-    final = spark.sql(
-        """
-        SELECT user_id,
-               max(n_events) AS n_events,
-               max_by(total_value, n_events) AS total_value
-        FROM t_totals GROUP BY user_id
-        """
-    ).collect()
-    got = {r["user_id"]: (r["n_events"], round(r["total_value"], 4)) for r in final}
-    expected = {
-        r["user_id"]: (r["n"], round(r["tv"], 4))
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert got == expected
-    # multiple micro-batches => at least one user saw >1 update
-    n_updates = spark.sql("SELECT count(*) AS n FROM t_totals").first()["n"]
-    assert n_updates > len(expected)
-
-
 def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     """Watermarked stream-stream join == the batch range join on the
     same data (purchases x prior-60min events per user)."""
@@ -232,51 +186,6 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_foreach_batch_upsert_latest_per_user(spark, sf_dir, tmp_path):
-    """foreachBatch MERGE sink: after draining the stream, the keyed
-    table holds exactly the batch-wide latest event per user."""
-    from covid19_etl_pipeline_spark.streaming.joins import (
-        foreach_batch_upsert,
-        latest_per_key,
-    )
-
-    ev = _events(spark, sf_dir, max_user=7)
-    src = _stage_stream_dir(spark, ev, tmp_path, "fbu", n_files=3, chrono=True)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    spark.sql("DROP TABLE IF EXISTS t_latest")
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            foreach_batch_upsert(
-                "t_latest",
-                keys=("user_id",),
-                reduce_batch=lambda b: latest_per_key(b, "user_id", ("ts", "event_id")),
-                path=str(tmp_path / "t_latest_data"),
-            )
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        r["user_id"]: (r["ts"], r["event_id"])
-        for r in spark.table("t_latest").collect()
-    }
-    expected = {
-        r["user_id"]: (r["ts"], r["event_id"])
-        for r in latest_per_key(ev, "user_id", ("ts", "event_id")).collect()
-    }
-    assert got == expected
-    spark.sql("DROP TABLE IF EXISTS t_latest")
-
-
 def test_streaming_dedup_across_microbatches(spark, sf_dir, tmp_path):
     """Rows re-delivered in a LATER micro-batch must be dropped: feed
     the same file twice, expect each event exactly once."""
@@ -295,58 +204,3 @@ def test_streaming_dedup_across_microbatches(spark, sf_dir, tmp_path):
 
     got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM t_dedup").first()
     assert got["n"] == got["d"] == ev.count()
-
-
-def test_transform_with_state_matches_v1(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas lifetime counters (Spark 4 typed-state
-    API) produce the same final per-user totals as the batch groupBy —
-    the modern twin of the applyInPandasWithState form.
-
-    The state-server protocol needs google.protobuf, which this
-    container does not ship — skip (not fail) where absent, the same
-    environment-gating policy as the image codec stub."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState state server requires protobuf",
-    )
-    from covid19_etl_pipeline_spark.streaming.stateful import (
-        stateful_running_totals_v2,
-    )
-
-    ev = _events(spark, sf_dir, max_user=8)
-    src = _stage_stream_dir(spark, ev, tmp_path, "totals2", n_files=3)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        _drain(stateful_running_totals_v2(stream), "t_totals2", "update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    final = spark.sql(
-        """
-        SELECT user_id,
-               max(n_events) AS n_events,
-               max_by(total_value, n_events) AS total_value
-        FROM t_totals2 GROUP BY user_id
-        """
-    ).collect()
-    got = {r["user_id"]: (r["n_events"], round(r["total_value"], 4)) for r in final}
-    expected = {
-        r["user_id"]: (r["n"], round(r["tv"], 4))
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("tv"))
-        .collect()
-    }
-    assert got == expected
