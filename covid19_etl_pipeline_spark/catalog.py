@@ -34,9 +34,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-#: Small dimension tables — always safe to broadcast in joins.
-DIM_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

@@ -6,9 +6,12 @@ end-to-end — but its serving schema implies the enrichment join
 parity requires the standard join family. All are Spark built-ins; the
 engine's contribution is the scale discipline:
 
-- dimension joins are explicitly ``F.broadcast`` (no shuffle of the fact
-  side — at 100 TB shuffling the fact table for a 25-row region dim
-  would be the bottleneck);
+- fixed-size dimensions (region, nation) are explicitly ``F.broadcast``
+  (no shuffle of the fact side — at 100 TB shuffling the fact table for
+  a 25-row region dim would be the bottleneck); dimensions that grow
+  with the data (customer, supplier, part) carry no hint: Catalyst
+  broadcasts them while they fit ``autoBroadcastJoinThreshold`` and AQE
+  re-decides from runtime sizes;
 - fact-fact equi joins rely on AQE to pick shuffle-hash vs sort-merge
   and to split skewed partitions;
 - membership semantics use left_semi / left_anti (never a distinct +

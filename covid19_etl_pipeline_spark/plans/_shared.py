@@ -1,10 +1,42 @@
 """Oracle-SQL fragments and helpers shared by multiple query-family
 modules (kept in exact lockstep with the operator-package
-expressions they mirror — see each helper's comment).
+expressions they mirror — see each helper's comment), plus the one
+plan sub-tree several families join the same way (``trade_lines``).
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from covid19_etl_pipeline_spark.catalog import load_table
+
+
+def trade_lines(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
+    """The caller's lineitem rows joined to orders, customer, supplier
+    and nation in its two roles: each line gains ``cust_nation`` (its
+    customer's nation name) and ``supp_nation`` (its supplier's). ``li``
+    must carry ``l_orderkey`` and ``l_suppkey``; its own columns and
+    filters pass through.
+
+    lineitem⋈orders is the fact-sized shuffle. Only the 25-row
+    ``nation`` is hinted; customer and supplier grow with the data, so
+    Catalyst sizes them against ``autoBroadcastJoinThreshold`` (and AQE
+    re-decides at runtime) instead of a hint forcing a broadcast.
+    """
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cn = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
+    sn = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
+    return (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .join(c, F.col("o_custkey") == c["c_custkey"])
+        .join(s, li["l_suppkey"] == s["s_suppkey"])
+        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
+        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
+    )
 
 
 _D_TOKS = r"regexp_split_to_array(trim(text), '\s+')"

@@ -13,6 +13,7 @@ from covid19_etl_pipeline_spark.operators import graph
 from covid19_etl_pipeline_spark.operators.partitioning import barrier
 
 from covid19_etl_pipeline_spark.plans._registry import _register
+from covid19_etl_pipeline_spark.plans._shared import trade_lines
 
 @_register(
     "nation_trade_pagerank",
@@ -69,7 +70,8 @@ from covid19_etl_pipeline_spark.plans._registry import _register
     "used to weight crawl data): weighted PageRank by power iteration "
     "over the customer-nation -> supplier-nation trade graph. The "
     "corpus-scale work is ONE pass building the edge list (lineitem "
-    "joins orders on the only real shuffle; all four dims broadcast); "
+    "joins orders on the only real shuffle; the dims broadcast — "
+    "nation by hint, customer and supplier by size); "
     "the 3 unrolled iterations then run on the aggregated graph, each "
     "one join + one sum keyed on dst. Per-iteration 8dp rounding pins "
     "float drift so the iterative result stays hash-comparable (the "
@@ -81,27 +83,9 @@ from covid19_etl_pipeline_spark.plans._registry import _register
 )
 def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("src"))
-            ),
-            F.col("c_nationkey") == F.col("cn_key"),
-        )
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("dst"))
-            ),
-            F.col("s_nationkey") == F.col("sn_key"),
-        )
-        .groupBy("src", "dst")
+        trade_lines(spark, sf_dir, li)
+        .groupBy(F.col("cust_nation").alias("src"), F.col("supp_nation").alias("dst"))
         .agg(F.count("*").cast("double").alias("w"))
     )
     ranks = graph.pagerank(edges, "src", "dst", weight="w", iterations=3)
@@ -160,22 +144,8 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
     edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        trade_lines(spark, sf_dir, li)
         .filter(F.col("cust_nation") != F.col("supp_nation"))
         .select(
             F.least("cust_nation", "supp_nation").alias("a"),
@@ -257,24 +227,10 @@ def nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(
-        F.col("n_nationkey").alias("ck"), F.col("n_name").alias("src")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sk"), F.col("n_name").alias("dst")
-    )
     edges_raw = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(cn), c["c_nationkey"] == cn["ck"])
-        .join(F.broadcast(sn), s["s_nationkey"] == sn["sk"])
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
+        trade_lines(spark, sf_dir, li)
+        .filter(F.col("cust_nation") != F.col("supp_nation"))
+        .groupBy(F.col("cust_nation").alias("src"), F.col("supp_nation").alias("dst"))
         .agg(F.count("*").alias("cnt"))
     )
     rk = F.row_number().over(
@@ -338,20 +294,10 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cheapest_trade_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("dst"))
     edges_raw = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(cn), c["c_nationkey"] == cn["ck"])
-        .join(F.broadcast(sn), s["s_nationkey"] == sn["sk"])
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
+        trade_lines(spark, sf_dir, li)
+        .filter(F.col("cust_nation") != F.col("supp_nation"))
+        .groupBy(F.col("cust_nation").alias("src"), F.col("supp_nation").alias("dst"))
         .agg(F.count("*").alias("cnt"))
     )
     rk = F.row_number().over(
@@ -441,27 +387,9 @@ def cheapest_trade_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("src"))
-            ),
-            F.col("c_nationkey") == F.col("cn_key"),
-        )
-        .join(
-            F.broadcast(
-                n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("dst"))
-            ),
-            F.col("s_nationkey") == F.col("sn_key"),
-        )
-        .groupBy("src", "dst")
+        trade_lines(spark, sf_dir, li)
+        .groupBy(F.col("cust_nation").alias("src"), F.col("supp_nation").alias("dst"))
         .agg(F.count("*").alias("w"))
     )
     labels = graph.label_propagation(edges, "src", "dst", weight="w", iterations=3)
@@ -528,23 +456,9 @@ def nation_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_trade_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     raw = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("a"))),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("b"))),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("a", "b")
+        trade_lines(spark, sf_dir, li)
+        .groupBy(F.col("cust_nation").alias("a"), F.col("supp_nation").alias("b"))
         .agg(F.count("*").alias("w"))
     )
     symw = (
@@ -671,23 +585,9 @@ def nation_trade_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("src"))),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("dst"))),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
+        trade_lines(spark, sf_dir, li)
+        .groupBy(F.col("cust_nation").alias("src"), F.col("supp_nation").alias("dst"))
         .agg(F.count("*").alias("w"))
     )
     labels = graph.label_propagation(edges, "src", "dst", weight="w", iterations=3)
@@ -797,23 +697,9 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 10
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     raw = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("cn"), F.col("n_name").alias("a"))),
-            F.col("c_nationkey") == F.col("cn"),
-        )
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sn"), F.col("n_name").alias("b"))),
-            F.col("s_nationkey") == F.col("sn"),
-        )
-        .groupBy("a", "b")
+        trade_lines(spark, sf_dir, li)
+        .groupBy(F.col("cust_nation").alias("a"), F.col("supp_nation").alias("b"))
         .agg(F.count("*").alias("w"))
     )
     symw = (
@@ -918,22 +804,8 @@ def nation_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
     edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        trade_lines(spark, sf_dir, li)
         .filter(F.col("cust_nation") != F.col("supp_nation"))
         .groupBy(
             F.least("cust_nation", "supp_nation").alias("a"),
@@ -1052,22 +924,8 @@ def nation_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_trade_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
     weighted = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        trade_lines(spark, sf_dir, li)
         .filter(F.col("cust_nation") != F.col("supp_nation"))
         .groupBy(
             F.least("cust_nation", "supp_nation").alias("a"),
@@ -1178,22 +1036,8 @@ def nation_trade_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def trade_edge_truss_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cn = n.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    sn = n.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
     edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        trade_lines(spark, sf_dir, li)
         .filter(F.col("cust_nation") != F.col("supp_nation"))
         .select(
             F.least("cust_nation", "supp_nation").alias("a"),

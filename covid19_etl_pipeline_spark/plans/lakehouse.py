@@ -190,7 +190,6 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_etl_pipeline_spark.quality import (
-        Expectation,
         check_expectations,
         expect_between,
         expect_in,
@@ -202,16 +201,8 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules = [
         expect_not_null("o_custkey"),
         expect_not_null("o_orderdate"),
-        Expectation(
-            "o_orderstatus_in_list",
-            F.col("o_orderstatus").isNull()
-            | F.col("o_orderstatus").isin("O", "F", "P"),
-        ),
-        Expectation(
-            "o_totalprice_between_0_1000000",
-            F.col("o_totalprice").isNull()
-            | ((F.col("o_totalprice") >= 0) & (F.col("o_totalprice") <= 1000000)),
-        ),
+        expect_in("o_orderstatus", ("O", "F", "P")),
+        expect_between("o_totalprice", 0, 1000000),
         expect_unique("o_orderkey"),
     ]
     return check_expectations(o, rules).orderBy("expectation")
@@ -332,7 +323,7 @@ def star_schema_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         count_row(
             "orders_orphan_customer",
-            o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "left_anti"),
+            o.join(c, o["o_custkey"] == c["c_custkey"], "left_anti"),
         ),
         count_row(
             "suppliers_unreferenced",

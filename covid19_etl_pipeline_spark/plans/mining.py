@@ -51,7 +51,7 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     ob = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
         .transform(barrier)  # feeds marginals, the total, AND both pair-join sides

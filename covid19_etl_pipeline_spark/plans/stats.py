@@ -1722,7 +1722,7 @@ def revenue_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cr = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy("o_custkey", "c_nationkey")
         .agg(F.sum("o_totalprice").alias("x"))
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.catalog import TABLES, load_table
 
 from covid19_etl_pipeline_spark.plans._registry import _register
+from covid19_etl_pipeline_spark.plans._shared import trade_lines
 
 @_register(
     "top_unshipped_orders",
@@ -75,8 +76,9 @@ def top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY r_name, revenue DESC, n_name
     """,
     "TPC-H Q5 shape: 5-table star join — region/nation broadcast as tiny "
-    "dims, customer broadcasts under AQE, the orders-to-lineitem fact join "
-    "is the only shuffle; per-(region, nation) revenue rollup",
+    "dims (hinted), customer by size (Catalyst's broadcast threshold, "
+    "re-decided by AQE), the orders-to-lineitem fact join is the only "
+    "shuffle; per-(region, nation) revenue rollup",
 )
 def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region")
@@ -86,7 +88,7 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
@@ -127,8 +129,8 @@ def supplier_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        li.join(p, F.col("p_partkey") == F.col("l_partkey"))
+        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -235,7 +237,7 @@ def sole_returner_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         others.filter(F.col("o_flag") == "R"), multi_cond, "left_anti"
     )
     return (
-        sole.join(F.broadcast(sup), sole["l_suppkey"] == sup["s_suppkey"])
+        sole.join(sup, sole["l_suppkey"] == sup["s_suppkey"])
         .groupBy("s_name")
         .agg(F.countDistinct("l_orderkey").alias("n_orders"))
         .orderBy(F.col("n_orders").desc(), "s_name")
@@ -307,38 +309,22 @@ def small_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "TPC-H Q7 shape — cross-border trade volume with the SAME "
     "dimension (nation) joined in TWO roles (supplier's vs customer's "
-    "nation): one fact⋈fact shuffle (lineitem⋈orders on orderkey), "
-    "every dimension chain broadcast, the inequality filter applied "
+    "nation): one fact⋈fact shuffle (lineitem⋈orders on orderkey) in "
+    "the shared trade_lines join, nation broadcast by hint and "
+    "customer/supplier by size, the inequality filter applied "
     "after both roles resolve. Year-banded predicate prunes at the "
     "scan. Completes the multi-join matrix (Q3/Q5/Q9/Q13/Q17/Q21 "
     "elsewhere); unique tie-broken top-25",
 )
 def nation_pair_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     ship_year = F.year(F.to_date("l_shipdate"))
-    joined = (
-        li.withColumn("ship_year", ship_year)
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .withColumn("ship_year", ship_year)
         .filter(F.col("ship_year").between(1996, 1997))
-        .join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .join(
-            F.broadcast(n.select(
-                F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-            )),
-            F.col("c_nationkey") == F.col("cn_key"),
-        )
-        .join(
-            F.broadcast(n.select(
-                F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-            )),
-            F.col("s_nationkey") == F.col("sn_key"),
-        )
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
+    )
+    joined = trade_lines(spark, sf_dir, li).filter(
+        F.col("supp_nation") != F.col("cust_nation")
     )
     vol = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
@@ -455,9 +441,9 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_partkey") == F.col("b_partkey"))
             & (F.col("unit_cost") == F.col("best_cost")),
         )
-        .join(F.broadcast(sup), F.col("l_suppkey") == sup["s_suppkey"])
+        .join(sup, F.col("l_suppkey") == sup["s_suppkey"])
         .join(
-            F.broadcast(part.filter(F.col("p_size") > 45)),
+            part.filter(F.col("p_size") > 45),
             F.col("l_partkey") == part["p_partkey"],
         )
         .select(
@@ -556,7 +542,7 @@ def returned_item_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
     )
     rev = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
@@ -642,7 +628,7 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
-    ).join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+    ).join(p, F.col("l_partkey") == F.col("p_partkey"))
     promo = F.sum(F.when(F.col("p_type") == "PROMO", disc).otherwise(F.lit(0.0)))
     return joined.agg(
         (F.round(100.0 * promo / F.sum(disc), 4) + 0.0).alias("promo_revenue_pct"),
@@ -687,7 +673,7 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_name",
             "c_custkey",
@@ -728,7 +714,7 @@ def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    joined = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+    joined = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
     cond = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -796,7 +782,7 @@ def supplier_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         sv.withColumn("total_value", F.sum("supply_value").over(w))
         .withColumn("avg_value", F.avg("supply_value").over(w))
         .filter(F.col("supply_value") > 1.05 * F.col("avg_value"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             "s_name",
             F.col("l_suppkey").alias("s_suppkey"),
@@ -967,9 +953,9 @@ def national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .join(F.broadcast(reg), F.col("cn_region") == F.col("r_regionkey"))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             (F.round(nat_rev / F.sum(rev), 4) + 0.0).alias("mkt_share"),
@@ -1022,7 +1008,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("total_rev") == F.col("__max_rev"))
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        top.join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        top.join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_rev")
         .orderBy("s_suppkey")
     )
@@ -1071,8 +1057,8 @@ def supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
     return (
-        ps.join(F.broadcast(excl), ps["l_suppkey"] == excl["s_suppkey"], "left_anti")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        ps.join(excl, ps["l_suppkey"] == excl["s_suppkey"], "left_anti")
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
@@ -1125,7 +1111,7 @@ def promo_heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     heavy = (
-        shipped.join(F.broadcast(promo), F.col("l_partkey") == F.col("p_partkey"))
+        shipped.join(promo, F.col("l_partkey") == F.col("p_partkey"))
         .filter(F.col("qty") > 60)
         .select("l_suppkey")
         .distinct()

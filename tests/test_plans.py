@@ -8,6 +8,8 @@ performance bug even while results stay right.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from covid19_etl_pipeline_spark.plans.queries import REGISTRY
@@ -129,12 +131,103 @@ def test_capstone_stays_jvm_side(spark):
 
 
 def test_q7_shape_broadcasts_all_dims(spark):
-    """nation_pair_trade_volume: both nation roles + customer +
-    supplier broadcast; the only join that may shuffle is
+    """nation_pair_trade_volume: both nation roles (hinted) + customer +
+    supplier (sized under autoBroadcastJoinThreshold at this fixture,
+    not hinted) broadcast; the only join that may shuffle is
     lineitem⋈orders."""
     plan = _plan(spark, "nation_pair_trade_volume")
     assert plan.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in plan
+
+
+#: Queries joining customer, supplier or part as a dimension: every
+#: ``trade_lines`` caller plus the TPC-H/star queries that join those
+#: tables directly. The tables grow with the data, so no hint may pin
+#: them to a broadcast — Catalyst sizes them against the threshold.
+GROWING_DIM_QUERIES = (
+    "nation_trade_pagerank",
+    "nation_trade_triangles",
+    "bfs_shortest_hops",
+    "cheapest_trade_route",
+    "nation_trade_communities",
+    "nation_trade_assortativity",
+    "trade_community_modularity",
+    "nation_trade_kcore",
+    "nation_link_prediction",
+    "nation_trade_anf",
+    "trade_edge_truss_support",
+    "nation_pair_trade_volume",
+    "regional_revenue",
+    "supplier_nation_profit",
+    "sole_returner_suppliers",
+    "cheapest_supplier_per_part",
+    "returned_item_top_customers",
+    "promo_revenue_ratio",
+    "large_volume_customers",
+    "disjunctive_brand_revenue",
+    "supplier_value_concentration",
+    "national_market_share",
+    "top_revenue_supplier",
+    "supplier_part_variety",
+    "promo_heavy_suppliers",
+    "star_schema_fk_audit",
+    "brand_affinity_lift",
+    "revenue_theil_decomposition",
+)
+
+
+def _broadcast_tables(plan: str) -> set[str]:
+    """Parquet tables a BroadcastExchange ships as read: scans inside the
+    broadcast's own stage. Scans below a further exchange feed an
+    aggregate or a shuffle first, so they are not broadcast as-is."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    def is_exchange(line: str) -> bool:
+        return line.lstrip(" :+-").split(" ", 1)[0].endswith("Exchange")
+
+    found: set[str] = set()
+    for i, line in enumerate(lines):
+        if not line.lstrip(" :+-").startswith("BroadcastExchange"):
+            continue
+        cut = None  # depth of an exchange whose subtree is skipped
+        for sub in lines[i + 1 :]:
+            if depth(sub) <= depth(line):
+                break
+            if cut is not None and depth(sub) > cut:
+                continue
+            cut = depth(sub) if is_exchange(sub) else None
+            found.update(re.findall(r"/(\w+)\.parquet\]", sub))
+    return found
+
+
+@pytest.mark.parametrize("name", GROWING_DIM_QUERIES)
+def test_growing_dims_not_force_broadcast(spark, monkeypatch, name):
+    """With size-based broadcasting off, only hints can broadcast: no
+    broadcast side of the query's initial plan — nor of any barrier
+    input it materializes on the way — may scan customer, supplier or
+    part."""
+    plans: list[str] = []
+    df_type = type(spark.range(0))
+    cut = df_type.localCheckpoint
+
+    def recording_cut(df, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return cut(df, eager)
+
+    monkeypatch.setattr(df_type, "localCheckpoint", recording_cut)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = REGISTRY[name].fn(spark, SF)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set(key, saved)
+    for plan in plans:
+        assert not _broadcast_tables(plan) & {"customer", "supplier", "part"}, plan
 
 
 def test_salted_join_scatters_key(spark):
