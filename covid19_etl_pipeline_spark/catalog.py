@@ -15,10 +15,10 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from covid19_etl_pipeline_spark.sources.io import NANOS_AS_LONG, parquet_schema, read_parquet
 
 #: All tables in the driver's synthetic catalog (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -41,28 +41,15 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _nano_timestamp_fields(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark rejects them
-    outright unless ``legacy.parquet.nanosAsLong`` is on. Detected from
-    the footer (metadata-only read, no data IO)."""
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table. Parquet scan → full pushdown/pruning.
 
-    Nanosecond-timestamp columns are read as raw INT64 (runtime conf
-    ``spark.sql.legacy.parquet.nanosAsLong``) and restored to
-    TimestampType via integer-division ``div 1000`` (a double-precision
-    divide would corrupt epoch-nanos > 2^53).
+    The schema comes from one footer read, in the driver process
+    (``sources.io.parquet_schema``): building the frame runs no Spark
+    job. Nanosecond-timestamp columns found there are read as raw INT64
+    (runtime conf ``spark.sql.legacy.parquet.nanosAsLong``) and restored
+    to TimestampType via integer-division ``div 1000`` (a
+    double-precision divide would corrupt epoch-nanos > 2^53).
     """
     path = table_path(sf_dir, name)
     # Pin UTC at runtime (the caller's session may be vanilla): parquet
@@ -74,10 +61,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TIMESTAMP_NTZ (Spark 4 default), which unix_micros()/window() reject;
     # read them as instants in the pinned-UTC session instead.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    nanos = _nano_timestamp_fields(path)
+    footer = parquet_schema(spark, path)
+    nanos = footer[1]
     if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+        spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, path, footer)
     for c in nanos:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df

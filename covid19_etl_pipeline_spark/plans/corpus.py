@@ -8,10 +8,10 @@ original monolithic plans/queries.py.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.catalog import load_table
 from covid19_etl_pipeline_spark.operators import dedup
 from covid19_etl_pipeline_spark.operators import text
-from covid19_etl_pipeline_spark.operators.partitioning import barrier, spread
+from covid19_etl_pipeline_spark.operators.partitioning import barrier, join_side, spread
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 from covid19_etl_pipeline_spark.plans._shared import (
@@ -694,7 +694,7 @@ def recsys_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.explode(F.sequence(F.lit(1), F.lit(8))).alias("i")
     ).select("c_custkey", "i", ((hx % n_parts) + 1).alias("pi"))
     cand = (
-        draws.join(F.broadcast(pidx), "pi")
+        draws.join(join_side(pidx, n_parts), "pi")
         .groupBy("c_custkey", "p_partkey")
         .agg(F.min("i").alias("i"))
     )

@@ -8,7 +8,7 @@ original monolithic plans/queries.py.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.catalog import load_table
 from covid19_etl_pipeline_spark.operators import dedup
 from covid19_etl_pipeline_spark.operators import text
 from covid19_etl_pipeline_spark.operators.partitioning import barrier, join_side, spread

@@ -9,7 +9,7 @@ from __future__ import annotations
 from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.catalog import load_table
 
 from covid19_etl_pipeline_spark.plans._registry import _register
 
@@ -1022,6 +1022,7 @@ def lakehouse_nightly_maintenance(
     from covid19_etl_pipeline_spark.serving import vacuum_versions as _vacuum
     from covid19_etl_pipeline_spark.sources.io import (
         compact_parquet,
+        read_parquet,
         write_zordered,
     )
 
@@ -1059,7 +1060,7 @@ def lakehouse_nightly_maintenance(
         # engine-verified audit: conservation through the pointer...
         cur = read_current(spark, "orders_slice", root)
         rows_after = cur.count()
-        zorder_rows = spark.read.parquet(zdir).count()
+        zorder_rows = read_parquet(spark, zdir).count()
         # ...and REAL per-file disjointness of the restored clustering
         spans = (
             cur.select(

@@ -18,7 +18,7 @@ both sides per the plans/_registry.py conventions.
 from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+from covid19_etl_pipeline_spark.catalog import load_table
 from covid19_etl_pipeline_spark.operators import text
 
 from covid19_etl_pipeline_spark.plans._registry import _register
@@ -374,6 +374,7 @@ def streaming_corpus_gate_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dimension ships once per micro-batch plan",
 )
 def streaming_enrich_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from covid19_etl_pipeline_spark.sources.io import read_parquet
     from covid19_etl_pipeline_spark.streaming.daily_rollup import (
         read_events_stream,
         run_to_memory_sink,
@@ -382,7 +383,7 @@ def streaming_enrich_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staging = _staged_events_dir(spark, sf_dir)
     dim = (
-        spark.read.parquet(staging)
+        read_parquet(spark, staging)
         .groupBy("user_id")
         .agg(
             F.min_by("event_type", F.struct("ts", "event_id")).alias("channel")

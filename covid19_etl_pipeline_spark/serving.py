@@ -31,7 +31,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid19_etl_pipeline_spark.operators.partitioning import barrier
-from covid19_etl_pipeline_spark.sources.io import overwrite_partitions_dynamic, write_parquet
+from covid19_etl_pipeline_spark.sources.io import (
+    overwrite_partitions_dynamic,
+    read_parquet,
+    write_parquet,
+)
 
 #: Serving star table → (the mart it loads from, its partition columns);
 #: the tables mirror data_loader.py:66-160 DDL.
@@ -151,7 +155,7 @@ def publish_star_schema(
     rollup and the global daily rollup, none of them recomputed."""
     return {
         name: overwrite_table(
-            spark, spark.read.parquet(marts[mart]), name, root, partition_by=parts
+            spark, read_parquet(spark, marts[mart]), name, root, partition_by=parts
         )
         for name, (mart, parts) in STAR_FROM_MARTS.items()
     }
@@ -203,7 +207,7 @@ def read_current(spark: SparkSession, name: str, root: str) -> DataFrame:
     version = _read_pointer(name, root)
     if version is None:
         raise FileNotFoundError(f"no _CURRENT pointer for {name} under {root}")
-    return spark.read.parquet(f"{root}/{name}/v={version}")
+    return read_parquet(spark, f"{root}/{name}/v={version}")
 
 
 def rollback_version(name: str, root: str, version: str) -> None:
@@ -252,7 +256,7 @@ def cached_frame(
     snap = os.path.join(cache_root, key)
     marker = os.path.join(snap, "_SUCCESS")
     if os.path.exists(marker) and time.time() - os.path.getmtime(marker) < ttl_seconds:
-        return spark.read.parquet(snap)
+        return read_parquet(spark, snap)
     tmp = f"{snap}.tmp{os.getpid()}"
     build().write.mode("overwrite").parquet(tmp)
     try:
@@ -261,7 +265,7 @@ def cached_frame(
         os.rename(tmp, snap)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(snap)
+    return read_parquet(spark, snap)
 
 
 def list_versions(spark: SparkSession, name: str, root: str) -> DataFrame:
@@ -275,7 +279,7 @@ def list_versions(spark: SparkSession, name: str, root: str) -> DataFrame:
     for entry in sorted(os.listdir(base)):
         if entry.startswith("v="):
             version = entry[2:]
-            n = spark.read.parquet(os.path.join(base, entry)).count()
+            n = read_parquet(spark, os.path.join(base, entry)).count()
             rows.append((version, n, version == current))
     return spark.createDataFrame(
         rows, "version string, n_rows long, is_current boolean"
@@ -311,7 +315,7 @@ def delete_keys(
     Returns the number of rows deleted.
     """
     kc, pc = list(key_cols), list(partition_by)
-    tbl = spark.read.parquet(path)
+    tbl = read_parquet(spark, path)
     keys_d = F.broadcast(barrier(keys.select(*kc).distinct(), eager=True))
     per_part = (
         tbl.select(*kc, *pc)

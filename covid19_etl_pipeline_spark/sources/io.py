@@ -10,7 +10,10 @@ Reference parity:
   prior output; ``mode("overwrite")`` already does that atomically per
   directory, so the engine drops the manual delete.
 - S6 Parquet scan (data_loader.py:182-198 — pandas there; Spark here):
-  ``spark.read.parquet`` itself, through ``catalog.load_table``.
+  :func:`read_parquet`, the engine's one reader of existing parquet
+  (``catalog.load_table``, the serving tier, compaction). It binds the
+  schema from one footer read with pyarrow on the driver, so no Spark
+  job runs to infer it.
 - S3 ingest validation (validate_extracted_data,
   data_extractor.py:169-195): sample-read, reject empty.
 
@@ -24,11 +27,17 @@ partitions a job produced.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyarrow.types as pat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 
 def read_csv(
@@ -53,6 +62,126 @@ def read_csv(
         raise ValueError(f"{path}: header lacks declared columns {missing}")
     in_file = T.StructType([declared.get(n, T.StructField(n, T.StringType())) for n in names])
     return reader.schema(in_file).csv(path).select(*declared)
+
+
+#: Footer key under which Spark's parquet writer stores the row schema
+#: (JSON); Spark's own schema inference returns it as written.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Arrow leaf types Spark's parquet reader maps differently from
+# ``from_arrow_type``: unsigned ints widen (``from_arrow_type`` rejects
+# them) and an all-null column is a plain INT32.
+_READER_TYPES = {
+    pa.uint8(): T.ShortType(),
+    pa.uint16(): T.IntegerType(),
+    pa.uint32(): T.LongType(),
+    pa.uint64(): T.DecimalType(20, 0),
+    pa.null(): T.IntegerType(),
+}
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps ``name``: hidden are names
+    starting with ``.``, and with ``_`` unless a ``k=v`` partition."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer stands for ``path``'s schema: ``path``
+    itself, or the first data file of a sorted walk of the directory.
+    None when there is none, or when summary files are present (Spark
+    infers from those first)."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        if {"_metadata", "_common_metadata"} & set(files):
+            return None
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        data = sorted(f for f in files if _listed(f))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
+def _reader_type(at: pa.DataType, ntz: bool) -> T.DataType:
+    """The type Spark's parquet reader gives a column whose footer type
+    is ``at``. Raises where that is not known for sure; the caller then
+    leaves inference to Spark."""
+    if pat.is_struct(at):
+        return T.StructType([T.StructField(f.name, _reader_type(f.type, ntz)) for f in at])
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        return T.ArrayType(_reader_type(at.value_type, ntz))
+    if pat.is_map(at):
+        return T.MapType(_reader_type(at.key_type, ntz), _reader_type(at.item_type, ntz))
+    if pat.is_dictionary(at):
+        return _reader_type(at.value_type, ntz)
+    if pat.is_duration(at):
+        return T.LongType()  # a plain INT64 in the file
+    if at in _READER_TYPES:
+        return _READER_TYPES[at]
+    if (
+        pat.is_time(at)
+        or (pat.is_timestamp(at) and at.unit == "ns")
+        or (pat.is_decimal(at) and at.precision > 38)
+    ):
+        raise TypeError(f"no bound reader type for {at}")
+    return from_arrow_type(at, prefer_timestamp_ntz=ntz)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> tuple[T.StructType | None, tuple[str, ...]]:
+    """The schema Spark's inference gives the parquet file or directory
+    ``path``, from one footer read with pyarrow in the driver process,
+    plus the top-level columns stored as TIMESTAMP(NANOS).
+
+    Spark-written footers carry Spark's row schema, used as is. Others
+    map arrow types the way Spark's reader does under the session's
+    ``inferTimestampNTZ``; nanosecond columns are LongType, as inference
+    gives them under ``nanosAsLong``. The schema is None when it cannot
+    be bound exactly (no data file, a type without a sure mapping, INT96,
+    ``binaryAsString`` or ``mergeSchema`` on): the read then infers."""
+    conf = spark.conf
+    file = _footer_file(path)
+    if file is None or "true" in (
+        conf.get("spark.sql.parquet.binaryAsString", "false"),
+        conf.get("spark.sql.parquet.mergeSchema", "false"),
+    ):
+        return None, ()
+    try:
+        meta = pq.read_metadata(file)
+        if _SPARK_ROW_METADATA in (meta.metadata or {}):
+            return T.StructType.fromJson(json.loads(meta.metadata[_SPARK_ROW_METADATA])), ()
+        if any(meta.schema.column(i).physical_type == "INT96" for i in range(meta.num_columns)):
+            return None, ()
+        arrow = meta.schema.to_arrow_schema()
+        nanos = tuple(f.name for f in arrow if pat.is_timestamp(f.type) and f.type.unit == "ns")
+        ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+        fields = [
+            T.StructField(f.name, T.LongType() if f.name in nanos else _reader_type(f.type, ntz))
+            for f in arrow
+        ]
+    except (OSError, LookupError, ValueError, TypeError, pa.ArrowException):
+        return None, ()  # an unreadable footer, or a type without a sure mapping
+    return T.StructType(fields), nanos
+
+
+def read_parquet(
+    spark: SparkSession,
+    path: str,
+    footer: tuple[T.StructType | None, tuple[str, ...]] | None = None,
+) -> DataFrame:
+    """Parquet scan (S6) with its schema bound from the footer
+    (:func:`parquet_schema`, or ``footer`` when the caller already read
+    it): no Spark job runs to infer it. Hive partition columns still
+    come from Spark's partition discovery, appended last. Where the
+    schema cannot be bound, or nanosecond columns meet a session without
+    ``nanosAsLong``, Spark infers it, raising its own error where it
+    cannot read the file."""
+    schema, nanos = footer if footer is not None else parquet_schema(spark, path)
+    if schema is None or (nanos and spark.conf.get(NANOS_AS_LONG, "false") != "true"):
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def write_parquet(
@@ -142,7 +271,7 @@ def compact_parquet(
             if f.endswith(".parquet")
         )
         target_partitions = max(1, math.ceil(on_disk / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if sort_by is not None:
         df = df.repartitionByRange(target_partitions, sort_by).sortWithinPartitions(
             sort_by

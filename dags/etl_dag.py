@@ -64,10 +64,11 @@ def transform_task(run_id: str, raw_path: str, countries: tuple[str, ...] = ()) 
     Returns a JSON manifest path listing every mart written."""
     from covid19_etl_pipeline_spark.pipeline import run_transform_fanout
     from covid19_etl_pipeline_spark.session import get_spark, stop_spark
+    from covid19_etl_pipeline_spark.sources.io import read_parquet
 
     spark = get_spark(app_name="etl-dag-transform")
     try:
-        raw = spark.read.parquet(raw_path)
+        raw = read_parquet(spark, raw_path)
         marts = run_transform_fanout(raw, f"{_staging(run_id)}/marts", countries)
         manifest = f"{_staging(run_id)}/marts_manifest.json"
         with open(manifest, "w") as fh:

@@ -146,6 +146,54 @@ def test_overwrite_table_registers_view_without_a_job(spark, tmp_path, monkeypat
     assert inferred.exceptAll(view).count() == 0
 
 
+def _jobs_run_by(spark, build):
+    """``build()`` under a job group of its own: its result and the ids
+    of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{id(build)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_runs_no_job(spark, sf_dir):
+    """Every catalog table's schema is bound from its footer on the
+    driver: building the frames runs no Spark job."""
+    from covid19_etl_pipeline_spark.catalog import TABLES, load_table
+
+    frames, jobs = _jobs_run_by(spark, lambda: [load_table(spark, sf_dir, t) for t in TABLES])
+    assert jobs == []
+    assert frames[TABLES.index("lineitem")].count() == 6000
+
+
+def test_read_current_runs_no_job(spark, tmp_path):
+    from covid19_etl_pipeline_spark.serving import publish_versioned, read_current
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    publish_versioned(spark, df, "t_current", str(tmp_path), "001")
+    cur, jobs = _jobs_run_by(spark, lambda: read_current(spark, "t_current", str(tmp_path)))
+    assert jobs == []
+    assert sorted(r["id"] for r in cur.collect()) == [1, 2]
+
+
+def test_cached_query_hit_runs_no_job_before_its_action(spark, tmp_path):
+    from covid19_etl_pipeline_spark.serving import cached_query
+
+    spark.createDataFrame([(1, 2.0), (2, 3.0)], "k long, x double").createOrReplaceTempView(
+        "t_cached"
+    )
+    sql = "SELECT k, x * 2 AS y FROM t_cached"
+    miss = cached_query(spark, sql, str(tmp_path))
+    hit, jobs = _jobs_run_by(spark, lambda: cached_query(spark, sql, str(tmp_path)))
+    assert jobs == []
+    assert hit.schema == miss.schema
+    assert sorted(map(tuple, hit.collect())) == [(1, 4.0), (2, 6.0)]
+
+
 def test_jdbc_sink_round_trip(spark, tmp_path):
     """S8 external-store hand-off (data_loader.py:200-267 analog):
     overwrite = truncate-and-load, append accumulates, partitioned read

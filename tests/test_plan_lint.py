@@ -40,6 +40,32 @@ def test_lineage_cuts_only_in_partitioning():
     assert offenders == [], f"lineage cuts outside partitioning.barrier: {offenders}"
 
 
+def test_parquet_reads_only_in_sources_io():
+    """``sources.io.read_parquet`` binds every read's schema from the
+    footer, so no Spark job runs to infer it: no other module may call
+    ``<x>.read.parquet(`` itself. A reader whose schema is already
+    bound (``<x>.read.schema(...).parquet(``) is allowed."""
+    import ast
+    from pathlib import Path
+
+    import covid19_etl_pipeline_spark
+
+    root = Path(covid19_etl_pipeline_spark.__file__).parent
+    allowed = root / "sources" / "io.py"
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != allowed
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
+    ]
+    assert offenders == [], f"schema-inferring parquet reads outside sources.io: {offenders}"
+
+
 # Public names that only tests call, each kept for the reason given.
 ENTRY_POINTS = {
     "operators.projection.select_rename": "P1: the engine's only allowlist select-and-rename",

@@ -176,14 +176,16 @@ GROWING_DIM_QUERIES = (
 )
 
 
+def _depth(line: str) -> int:
+    """Nesting depth of one line of a physical plan's tree string."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
 def _broadcast_tables(plan: str) -> set[str]:
     """Parquet tables a BroadcastExchange ships as read: scans inside the
     broadcast's own stage. Scans below a further exchange feed an
     aggregate or a shuffle first, so they are not broadcast as-is."""
     lines = plan.splitlines()
-
-    def depth(line: str) -> int:
-        return len(line) - len(line.lstrip(" :+-"))
 
     def is_exchange(line: str) -> bool:
         return line.lstrip(" :+-").split(" ", 1)[0].endswith("Exchange")
@@ -194,11 +196,11 @@ def _broadcast_tables(plan: str) -> set[str]:
             continue
         cut = None  # depth of an exchange whose subtree is skipped
         for sub in lines[i + 1 :]:
-            if depth(sub) <= depth(line):
+            if _depth(sub) <= _depth(line):
                 break
-            if cut is not None and depth(sub) > cut:
+            if cut is not None and _depth(sub) > cut:
                 continue
-            cut = depth(sub) if is_exchange(sub) else None
+            cut = _depth(sub) if is_exchange(sub) else None
             found.update(re.findall(r"/(\w+)\.parquet\]", sub))
     return found
 
@@ -228,6 +230,32 @@ def test_growing_dims_not_force_broadcast(spark, monkeypatch, name):
         spark.conf.set(key, saved)
     for plan in plans:
         assert not _broadcast_tables(plan) & {"customer", "supplier", "part"}, plan
+
+
+def test_recsys_part_index_join_side_from_count(spark, monkeypatch):
+    """recsys_negative_samples picks the join side of its row-numbered
+    part index from the part count it already takes: above
+    ``BROADCAST_ROW_BOUND`` no BroadcastExchange, however deep its
+    subtree, scans part."""
+    from covid19_etl_pipeline_spark.operators import partitioning
+
+    monkeypatch.setattr(partitioning, "BROADCAST_ROW_BOUND", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        lines = _plan(spark, "recsys_negative_samples").splitlines()
+    finally:
+        spark.conf.set(key, saved)
+
+    broadcast_scans = set()
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").startswith("BroadcastExchange"):
+            for sub in lines[i + 1 :]:
+                if _depth(sub) <= _depth(line):
+                    break
+                broadcast_scans.update(re.findall(r"/(\w+)\.parquet\]", sub))
+    assert "part" not in broadcast_scans
 
 
 def test_salted_join_scatters_key(spark):

@@ -363,6 +363,128 @@ def test_load_table_pins_utc(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", old)
 
 
+def _assert_bound_as_inferred(spark, path: str) -> None:
+    """``read_parquet`` binds ``path``'s schema from its footer, and the
+    bound schema is the one Spark's own inference gives."""
+    from covid19_etl_pipeline_spark.sources.io import parquet_schema, read_parquet
+
+    assert parquet_schema(spark, path)[0] is not None, path
+    assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, path
+
+
+def test_read_parquet_binds_catalog_schemas(spark):
+    from covid19_etl_pipeline_spark.catalog import TABLES, table_path
+
+    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+        for name in TABLES:
+            _assert_bound_as_inferred(spark, table_path(sf, name))
+
+
+def test_read_parquet_binds_spark_partitioned_dir(spark, tmp_path):
+    """A Spark-written, year-partitioned directory with a timestamp and
+    nulls: the footer gives the data schema, partition discovery still
+    appends ``year`` last, and the rows read are the rows written."""
+    from covid19_etl_pipeline_spark.sources.io import read_parquet
+
+    df = spark.createDataFrame(
+        [(1, 2020, "a"), (2, 2021, None), (3, None, "c")], "id long, year int, v string"
+    ).withColumn("ts", F.when(F.col("id") != 2, F.current_timestamp()))
+    out = str(tmp_path / "by_year")
+    write_parquet(df, out, partition_by=("year",))
+    _assert_bound_as_inferred(spark, out)
+    back = read_parquet(spark, out)
+    assert back.columns == ["id", "v", "ts", "year"]
+    assert back.exceptAll(spark.read.parquet(out)).count() == 0
+    assert back.count() == 3
+
+
+def test_read_parquet_nanos_as_long(spark, tmp_path):
+    """A pyarrow-written TIMESTAMP(NANOS) column binds as LongType, what
+    inference gives under ``nanosAsLong``; without that conf the read
+    raises as Spark's own does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from covid19_etl_pipeline_spark.sources.io import NANOS_AS_LONG, read_parquet
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1, 2], "ts": ts}), path)
+    old = spark.conf.get(NANOS_AS_LONG)
+    try:
+        spark.conf.set(NANOS_AS_LONG, "false")
+        with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+            read_parquet(spark, path)
+        spark.conf.set(NANOS_AS_LONG, "true")
+        _assert_bound_as_inferred(spark, path)
+        back = read_parquet(spark, path)
+        assert back.schema["ts"].dataType == T.LongType()
+        assert back.orderBy("id").first()["ts"] == 1_700_000_000_123_456_789
+    finally:
+        spark.conf.set(NANOS_AS_LONG, old)
+
+
+def test_read_parquet_uint32_as_spark_reads_it(spark, tmp_path):
+    """Where ``from_arrow_type`` rejects a footer type or maps it
+    otherwise, the bound schema gives Spark's parquet-reader type:
+    unsigned ints widen (uint32 to LongType, values above the int32
+    range intact), a duration is its INT64, an all-null column INT32."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from covid19_etl_pipeline_spark.sources.io import read_parquet
+
+    path = str(tmp_path / "unsigned.parquet")
+    table = pa.table(
+        {
+            "u32": pa.array([4_000_000_000, None], pa.uint32()),
+            "u64": pa.array([2**64 - 1, 1], pa.uint64()),
+            "u8s": pa.array([[255], None], pa.list_(pa.uint8())),
+            "dur": pa.array([5, None], pa.duration("us")),
+            "nul": pa.array([None, None], pa.null()),
+        }
+    )
+    pq.write_table(table, path)
+    _assert_bound_as_inferred(spark, path)
+    back = read_parquet(spark, path)
+    assert back.schema["u32"].dataType == T.LongType()
+    assert back.orderBy("u32").collect() == spark.read.parquet(path).orderBy("u32").collect()
+    assert back.agg(F.max("u32")).first()[0] == 4_000_000_000
+
+
+def test_read_parquet_infers_where_the_footer_does_not_decide(spark, tmp_path):
+    """INT96 timestamps, a session reading binary as string, and a TIME
+    column Spark's reader refuses: nothing is bound, Spark infers, so
+    the schema (or the error) is Spark's own."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from covid19_etl_pipeline_spark.sources.io import parquet_schema, read_parquet
+
+    int96, binary, time = (str(tmp_path / f"{n}.parquet") for n in ("int96", "binary", "time"))
+    ts = pa.array([1_700_000_000_000_000, None], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), int96, use_deprecated_int96_timestamps=True)
+    pq.write_table(pa.table({"b": pa.array([b"x", None])}), binary)
+    pq.write_table(pa.table({"t": pa.array([1, None], pa.time64("us"))}), time)
+    assert parquet_schema(spark, int96)[0] is None
+    assert read_parquet(spark, int96).schema == spark.read.parquet(int96).schema
+    assert parquet_schema(spark, time)[0] is None
+    with pytest.raises(Exception, match="TIME"):
+        read_parquet(spark, time)
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    assert parquet_schema(spark, binary)[0] is not None
+    try:
+        spark.conf.set(key, "true")
+        assert parquet_schema(spark, binary)[0] is None
+        assert read_parquet(spark, binary).schema == spark.read.parquet(binary).schema
+        assert read_parquet(spark, binary).schema["b"].dataType == T.StringType()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     from covid19_etl_pipeline_spark.sources.io import compact_parquet
 
