@@ -1,12 +1,13 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+After one engine warm-up every run does the same work, ``PASSES`` full
+passes over ``HEADLINE``: nothing is re-run on the strength of an
+earlier result or of host steal. Each query is fully materialized via
+the ``noop`` sink (forces every column/row through the physical plan
+with zero write cost — unlike ``count()``, which lets Catalyst prune
+the measures). Prints per-pass ``# ...`` detail lines, then ONE line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-
-Each query is fully materialized via the ``noop`` sink (forces every
-column/row through the physical plan with zero write cost — unlike
-``count()``, which lets Catalyst prune the measures).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import time
 
 from covid19_etl_pipeline_spark.plans.queries import REGISTRY
 from covid19_etl_pipeline_spark.session import get_spark
+from perfbench.common import steal_seconds
 
 #: Headline set: PINNED at one query per operator family (agg, joins,
 #: windows, set ops, dedup, similarity, text, graph, sketch, layout,
@@ -96,94 +98,20 @@ HEADLINE = (
     "multimodal_bmp_stats",
 )
 
+#: Full passes over HEADLINE per run; each query reports its minimum
+#: across them (pyperf steady-state semantics), so one pass taken under
+#: host contention does not set the number.
+PASSES = 3
+
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _steal_sec() -> float | None:
-    """Cumulative hypervisor CPU-steal seconds (/proc/stat field 8).
-
-    Reported alongside the timings because this box runs as a guest VM
-    and experiences EPISODIC heavy steal (observed: identical code,
-    63s vs 109s total wall across runs an hour apart with zero local
-    load). A nonzero delta flags a run whose wall-clock includes host
-    contention, not engine cost.
-    """
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        return int(parts[8]) / os.sysconf("SC_CLK_TCK")
-    except Exception:
-        return None
-
-
-def _min_of_passes(doc: dict) -> dict[str, float] | None:
-    """Per-query min across a bench_last.json-style ``all_passes`` list.
-
-    The steady-state reconstruction: a pass taken under host contention
-    or session fatigue inflates individual queries, but the elementwise
-    min across passes recovers the engine's real cost (pyperf
-    semantics). r06's kept pass read 87.7s while min-of-passes read
-    60.3s — the baseline must be the latter or every next-round diff is
-    against a polluted number."""
-    passes = doc.get("all_passes")
-    if not passes:
-        return None
-    out: dict[str, float] = {}
-    for p in passes:
-        for name, sec in (p.get("timings") or {}).items():
-            if name not in out or sec < out[name]:
-                out[name] = sec
-    return out or None
-
-
-def _load_baseline(repo: str, sf: str) -> dict[str, float]:
-    """Newest parseable per-query baseline at this sf, for the
-    contention-outlier retry trigger. Prefers bench_last.json's
-    min-of-passes reconstruction (clean steady-state numbers) over the
-    committed BENCH_r*.json kept-pass totals, then walks BENCH_r*.json
-    newest-first until one artifact actually yields per-query timings:
-    BENCH_r03.json stored "parsed": null (summary line outgrew the
-    driver tail capture), and stopping at the newest file silently
-    disabled the retry baseline for the whole round."""
-    ref_paths = sorted(
-        p for p in os.listdir(repo)
-        if p.startswith("BENCH_r") and p.endswith(".json")
-    )
-    for p in ["bench_last.json"] + list(reversed(ref_paths)):
-        try:
-            with open(os.path.join(repo, p)) as fh:
-                doc = json.load(fh)
-            parsed = doc.get("parsed") or {}
-            cand = (
-                _min_of_passes(doc)
-                or parsed.get("queries")
-                or doc.get("queries")
-                or {}
-            )
-            if not cand or not isinstance(cand, dict):
-                continue
-            if doc.get("sf") not in (sf, float(sf)) and parsed.get(
-                "sf"
-            ) not in (sf, float(sf)):
-                # reference timings are sf-specific; other scales have
-                # no baseline to call an outlier against
-                continue
-            return cand
-        except Exception:
-            continue
-    if ref_paths:
-        print(f"# bench: no usable outlier baseline in {ref_paths}", file=sys.stderr)
-    return {}
-
-
-def _run_pass(
-    spark, sf_dir: str, ref: dict[str, float]
-) -> tuple[dict[str, float], dict[str, float], float | None]:
-    """One full headline measurement pass. Returns (timings, retried
-    first-run seconds, host-steal seconds accrued during the pass)."""
-    steal0 = _steal_sec()
+def _run_pass(spark, sf_dir: str) -> tuple[dict[str, float], float | None]:
+    """One full headline pass: (seconds per query, host-steal seconds
+    accrued during the pass, None where /proc/stat is unreadable)."""
+    steal0 = steal_seconds()
     timings: dict[str, float] = {}
     for name in HEADLINE:
         start = time.perf_counter()
@@ -194,120 +122,33 @@ def _run_pass(
         # without this, pinned blocks accumulate across 50 queries
         # and later queries pay the GC/memory pressure
         gc.collect()
-
-    # Contention-outlier re-measurement (pyperf-style): this box is a
-    # guest VM with measured EPISODIC host contention (identical code:
-    # 63s vs 109s totals an hour apart; see host_cpu_steal_sec). A
-    # query that lands >1.5x over its last RECORDED time gets ONE
-    # re-run and reports the min — separating host noise from real
-    # regressions without changing single-shot semantics for anything
-    # inside the noise band. Retried names are reported so the
-    # adjustment is visible, not silent.
-    # Both measurements are reported ("retried": {name: first_run_sec})
-    # so nothing is silently discarded; note the re-run is warm
-    # (codegen cached), so a retried entry reads as steady-state cost.
-    retried: dict[str, float] = {}
-    for name, prev in ref.items():
-        # floor 0.2s (was 0.5 through r11): the r11 round-over-round
-        # geomean was dominated by +0.1-0.4s smear on sub-0.5s queries
-        # that the old floor could never re-measure (VERDICT r11 #2/#4)
-        if name in timings and prev >= 0.2 and timings[name] > 1.5 * prev:
-            first = timings[name]
-            start = time.perf_counter()
-            materialize(REGISTRY[name].fn(spark, sf_dir))
-            timings[name] = min(first, round(time.perf_counter() - start, 3))
-            retried[name] = first
-            gc.collect()
-    # Retry insurance for FIRST-SEEN headline queries (r04 verdict #4):
-    # a query with no baseline entry can never trip the >1.5x trigger, so
-    # a steal-inflated first pass would be recorded unchallenged (r04:
-    # skewed_key_rollup_salted logged 2.07x its real cost because the
-    # newest parseable baseline predated the query). Every no-baseline
-    # query gets ONE unconditional warm re-measure, min-of-two, visible
-    # via "retried". Capped so a round with NO parseable baseline at all
-    # degrades to partial insurance instead of doubling the whole run.
-    no_base = [n for n in HEADLINE if n not in ref and n not in retried]
-    if len(no_base) > 12:
-        print(
-            f"# bench: {len(no_base)} queries lack a baseline; "
-            "re-measuring only the first 12",
-            file=sys.stderr,
-        )
-        no_base = no_base[:12]
-    for name in no_base:
-        first = timings[name]
-        start = time.perf_counter()
-        materialize(REGISTRY[name].fn(spark, sf_dir))
-        timings[name] = min(first, round(time.perf_counter() - start, 3))
-        retried[name] = first
-        gc.collect()
-    # Flagged queries with a hard per-round bar: a steal-inflated first
-    # pass always gets ONE re-measurement even when the >1.5x-vs-baseline
-    # trigger doesn't fire (the r03 training_corpus artifact recorded
-    # 3.598s on a host measuring ~10% slow while a clean host measured
-    # 2.85s — the gate reads the artifact, so the artifact must be
-    # noise-proof). Same min-of-two, same visibility via "retried".
-    # skewed_key_rollup_salted carries a first-touch cost ~1s above its
-    # steady state (measured: cold 6.9s in isolation / ~2.3s mid-bench,
-    # warm 1.0-1.4s; its r03 1.02s artifact rode the plain twin's warm
-    # scan) — the bar records the steady-state join cost the query
-    # exists to measure.
-    for name, bar in (("training_corpus", 3.0), ("skewed_key_rollup_salted", 1.5)):
-        if name in timings and name not in retried and timings[name] > bar:
-            first = timings[name]
-            start = time.perf_counter()
-            materialize(REGISTRY[name].fn(spark, sf_dir))
-            timings[name] = min(first, round(time.perf_counter() - start, 3))
-            retried[name] = first
-            gc.collect()
-
-    steal1 = _steal_sec()
-    steal = (
-        round(steal1 - steal0, 1)
-        if steal0 is not None and steal1 is not None
-        else None
-    )
-    return timings, retried, steal
+    steal1 = steal_seconds()
+    steal = None if None in (steal0, steal1) else round(steal1 - steal0, 1)
+    return timings, steal
 
 
-#: Re-run the whole headline pass while host steal exceeds this share
-#: of the pass's TOTAL CPU CAPACITY (wall × n_cpus). /proc/stat's
-#: aggregate cpu line sums steal across all CPUs, so the raw delta is
-#: cpu-seconds, not wall-seconds — r06 divided by wall alone, read a
-#: 3.4%-of-capacity pass as "108% of wall", and re-ran a pass that was
-#: essentially clean. 2% of 32-CPU capacity ≈ 43 cpu-sec on a ~67s
-#: pass; below that steal is noise, above it the artifact would
-#: mis-charge host contention to the engine.
-STEAL_FRAC_LIMIT = 0.02
-#: ... and an ABSOLUTE steal trigger (r08 verdict #4): the r08
-#: end-of-round pass drifted +9.4% under just 7.6 cpu-sec of steal
-#: (0.37% of capacity — far under the fraction trigger) as a uniform
-#: +0.1–0.7s smear across ~40 queries; per-query retries fired for
-#: only 2. Critical-path steal inflates wall far beyond its
-#: cpu-second share, so ANY measurable steal beyond noise re-runs the
-#: pass — min-of-passes keeps whichever pass was clean.
-STEAL_ABS_LIMIT_SEC = 2.0
-#: Re-run the whole headline pass when its wall total exceeds the
-#: baseline reconstruction by this ratio even with low measured steal —
-#: contention concentrated on critical-path threads inflates wall far
-#: more than its cpu-second share suggests (r05: 10.4 cpu-sec of steal,
-#: 0.6% of capacity, inflated the committed total 55→67s; r08: 7.6
-#: cpu-sec, +9.4% — hence 1.12, tight enough to catch a smear, loose
-#: enough that run-to-run noise inside ±10% doesn't burn passes).
-WALL_REGRESS_LIMIT = 1.12
-#: ALWAYS run at least this many full passes (r11 verdict #2/#4): the
-#: r11 artifact was a single pass scored against r10's min-of-two —
-#: structurally asymmetric, and twenty sub-0.5s queries smeared >10%
-#: without any retry firing. Two passes minimum makes every committed
-#: artifact a per-query min-of->=2 regardless of steal triggers.
-MIN_PASSES = 2
-MAX_PASSES = 3
+def summarize(passes: list[tuple[dict[str, float], float | None]], sf: str) -> dict:
+    """The summary line: per-query minimum across ``passes``, their sum,
+    and each pass's total and host steal (the minimum steal is the
+    run's ``host_cpu_steal_sec``)."""
+    mins = {n: min(t[n] for t, _ in passes) for n in passes[0][0]}
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(mins.values()), 3),
+        "unit": "sec",
+        "n": len(mins),
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "host_cpu_steal_sec": min((s for _, s in passes if s is not None), default=None),
+        "passes": [{"total": round(sum(t.values()), 3), "steal": s} for t, s in passes],
+        # 2dp keeps every query inside the driver's fixed-size tail
+        # capture (r03: the line outgrew it and the perf signal was lost)
+        "queries": {n: round(v, 2) for n, v in mins.items()},
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    repo = os.path.dirname(os.path.abspath(__file__))
     spark = get_spark(app_name="bench")
 
     # warm the JVM/codegen paths once with the cheapest query, and the
@@ -315,115 +156,17 @@ def main() -> None:
     # startup costs are not attributed to whichever headline query
     # happens to run first (queries measure steady-state cost)
     materialize(REGISTRY["rollup_entity"].fn(spark, sf_dir))
-    materialize(
-        spark.range(8).repartition(8).mapInPandas(
-            lambda it: it, schema="id long"
-        )
-    )
+    materialize(spark.range(8).repartition(8).mapInPandas(lambda it: it, schema="id long"))
 
-    ref = _load_baseline(repo, sf)
-
-    # Steal-aware multi-pass measurement (r05 verdict #1, r06 verdict
-    # #1): a single pass taken under heavy host contention pollutes the
-    # committed artifact for a whole round. Run the full headline pass
-    # again (up to MAX_PASSES total) while either trigger fires:
-    # (a) host steal above STEAL_FRAC_LIMIT of total CPU capacity, or
-    # (b) wall total above WALL_REGRESS_LIMIT × the baseline
-    # reconstruction (catches critical-path contention that barely
-    # registers as cpu-second steal, and passes where steal is
-    # unreadable). The REPORTED timings are the per-query MIN across
-    # all passes (pyperf steady-state semantics) — NOT a whole-pass
-    # selection: r06's min-steal rule kept a session-fatigued 87.7s
-    # pass over a 66.9s one because fatigue reads as zero steal, while
-    # min-of-passes reconstructs the engine's real 60.3s. Every pass's
-    # (total, steal, timings) is recorded so nothing is silently
-    # discarded.
-    base_total = sum(ref.get(n, 0.0) for n in HEADLINE)
-    base_cover = sum(1 for n in HEADLINE if n in ref) / max(len(HEADLINE), 1)
-    ncpu = os.cpu_count() or 1
-    passes: list[dict] = []
-    for attempt in range(MAX_PASSES):
-        t, r, s = _run_pass(spark, sf_dir, ref)
-        wall = round(sum(t.values()), 3)
-        passes.append(
-            {"total": wall, "steal": s, "timings": t, "retried": r}
-        )
-        frac = (s or 0.0) / max(wall * ncpu, 1e-9)
-        steal_hot = s is not None and (
-            frac > STEAL_FRAC_LIMIT or s > STEAL_ABS_LIMIT_SEC
-        )
-        # wall trigger only when the baseline covers (nearly) the whole
-        # headline set, else new queries masquerade as regressions
-        wall_hot = (
-            base_cover >= 0.9 and wall > WALL_REGRESS_LIMIT * base_total
-        )
-        if attempt + 1 >= MIN_PASSES and not (steal_hot or wall_hot):
-            break
-        if attempt + 1 < MAX_PASSES:
-            if steal_hot:
-                why = f"{s}s host steal ({frac:.1%} of cpu capacity)"
-            elif wall_hot:
-                why = f"wall {wall}s > {WALL_REGRESS_LIMIT}x baseline {base_total:.1f}s"
-            else:
-                why = f"MIN_PASSES={MIN_PASSES}"
-            print(
-                f"# bench: pass {attempt + 1}: {why} — re-running the "
-                "full pass",
-                file=sys.stderr,
-            )
-    # per-query min across passes; retried = union (any name that got a
-    # warm re-measure in any pass reads as steady-state)
-    timings = dict(passes[0]["timings"])
-    retried = dict(passes[0]["retried"])
-    for p in passes[1:]:
-        for name, sec in p["timings"].items():
-            if sec < timings.get(name, float("inf")):
-                timings[name] = sec
-        retried.update(p["retried"])
-    steal = passes[0]["steal"] if len(passes) == 1 else min(
-        (p["steal"] for p in passes if p["steal"] is not None),
-        default=None,
-    )
-    total = round(sum(timings.values()), 3)
-    doc = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "n": len(timings),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "host_cpu_steal_sec": steal,
-        # every pass's (total, steal) + how they were combined — the
-        # multi-pass reduction is visible, never silent
-        "passes": [
-            {"total": p["total"], "steal": p["steal"]} for p in passes
-        ],
-        "combine": "per-query min across passes",
-        # a count only in the summary line; names and first-run seconds
-        # live in the detail lines + bench_last.json so cross-round
-        # consumers can discount warm-rerun (steady-state) timings
-        "retried": len(retried),
-        # 2dp keeps every query inside the driver's fixed-size tail
-        # capture (r03: the line outgrew it and the perf signal was lost)
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-    }
-    # Full detail (incl. retried first-run timings) to a sidecar file +
-    # human-readable lines FIRST, so the driver's fixed-size tail capture
-    # only ever has to hold the final summary line. r03 lesson: the
-    # single JSON line outgrew the 2000-char tail and the round's perf
-    # signal was lost ("parsed": null).
-    with open(os.path.join(repo, "bench_last.json"), "w") as fh:
-        json.dump(
-            {
-                **doc,
-                "retried_first_run_sec": retried,
-                "all_passes": passes,
-            },
-            fh,
-            indent=1,
-        )
-    for name, sec in timings.items():
-        flag = " (retried)" if name in retried else ""
-        print(f"# {sec:7.3f}s  {name}{flag}")
+    passes = [_run_pass(spark, sf_dir) for _ in range(PASSES)]
+    doc = summarize(passes, sf)
+    # detail lines first: a reader that keeps only the output's tail
+    # still gets the whole summary line
+    for i, p in enumerate(doc["passes"], 1):
+        print(f"# pass {i}: {p['total']:.3f}s, host steal {p['steal']}s")
+    for name in HEADLINE:
+        each = [t[name] for t, _ in passes]
+        print(f"# {min(each):7.3f}s  {name}  passes: " + " ".join(f"{s:.3f}" for s in each))
     print(json.dumps(doc, separators=(",", ":")))
     spark.stop()
 

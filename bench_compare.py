@@ -24,28 +24,10 @@ def load(path: str) -> dict:
     # the round driver wraps bench.py's JSON line in an envelope
     if "queries" not in doc and isinstance(doc.get("parsed"), dict):
         doc = doc["parsed"]
-    # multi-pass artifacts (bench_last.json "all_passes"): diff against
-    # the per-query MIN across passes, not whichever pass was kept —
-    # r06's kept pass was session-fatigued (87.7s) while min-of-passes
-    # reconstructs the engine's steady-state 60.3s. Which reduction was
-    # applied is labeled in the output so the comparison is auditable.
-    passes = doc.get("all_passes")
-    if passes:
-        mins: dict[str, float] = {}
-        for p in passes:
-            for name, sec in (p.get("timings") or {}).items():
-                if name not in mins or sec < mins[name]:
-                    mins[name] = sec
-        if mins:
-            doc = dict(doc)
-            doc["queries"] = mins
-            doc["value"] = round(sum(mins.values()), 3)
-            doc["_label"] = f"min across {len(passes)} passes"
     if "queries" not in doc or not isinstance(doc["queries"], dict):
         raise SystemExit(
             f"{path}: not a bench.py output (no per-query 'queries' map)"
         )
-    doc.setdefault("_label", "single recorded pass")
     return doc
 
 
@@ -73,8 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     removed = sorted(set(bq) - set(cq))
     bt, ct = float(base["value"]), float(cand["value"])
 
-    print(f"baseline: {args.baseline} ({base['_label']}); "
-          f"candidate: {args.candidate} ({cand['_label']})")
+    print(f"baseline: {args.baseline}; candidate: {args.candidate}")
     print(f"total: {bt:.3f}s -> {ct:.3f}s ({ct / bt:.2f}x) over "
           f"{len(set(bq) & set(cq))} shared queries")
     if improvements:

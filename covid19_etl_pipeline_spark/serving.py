@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from covid19_etl_pipeline_spark.operators.partitioning import barrier
 from covid19_etl_pipeline_spark.sources.io import (
     overwrite_partitions_dynamic,
+    parquet_row_count,
     read_parquet,
     write_parquet,
 )
@@ -279,7 +280,7 @@ def list_versions(spark: SparkSession, name: str, root: str) -> DataFrame:
     for entry in sorted(os.listdir(base)):
         if entry.startswith("v="):
             version = entry[2:]
-            n = read_parquet(spark, os.path.join(base, entry)).count()
+            n = parquet_row_count(os.path.join(base, entry))
             rows.append((version, n, version == current))
     return spark.createDataFrame(
         rows, "version string, n_rows long, is_current boolean"

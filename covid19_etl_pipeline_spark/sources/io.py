@@ -105,6 +105,18 @@ def _footer_file(path: str) -> str | None:
     return None
 
 
+def parquet_row_count(path: str) -> int:
+    """Rows in the parquet file or directory ``path``, summed from the
+    footers of the data files Spark's listing keeps: no Spark job."""
+    if os.path.isfile(path):
+        return pq.read_metadata(path).num_rows
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        total += sum(pq.read_metadata(os.path.join(root, f)).num_rows for f in files if _listed(f))
+    return total
+
+
 def _reader_type(at: pa.DataType, ntz: bool) -> T.DataType:
     """The type Spark's parquet reader gives a column whose footer type
     is ``at``. Raises where that is not known for sure; the caller then

@@ -180,6 +180,26 @@ def test_read_current_runs_no_job(spark, tmp_path):
     assert sorted(r["id"] for r in cur.collect()) == [1, 2]
 
 
+def test_list_versions_runs_no_job(spark, tmp_path):
+    """Row counts come from the footers: building the versions table
+    runs no Spark job, and each count is what a scan of that version
+    counts."""
+    from covid19_etl_pipeline_spark.serving import list_versions, publish_versioned
+    from covid19_etl_pipeline_spark.sources.io import read_parquet
+
+    root = str(tmp_path)
+    for i, version in enumerate(("001", "002", "003")):
+        df = spark.range(10 * (i + 1)).repartition(i + 1).withColumnRenamed("id", "k")
+        publish_versioned(spark, df, "t_versions", root, version)
+    versions, jobs = _jobs_run_by(spark, lambda: list_versions(spark, "t_versions", root))
+    assert jobs == []
+    rows = versions.collect()
+    assert [r["version"] for r in rows] == ["001", "002", "003"]
+    for r in rows:
+        path = f"{root}/t_versions/v={r['version']}"
+        assert r["n_rows"] == read_parquet(spark, path).count()
+
+
 def test_cached_query_hit_runs_no_job_before_its_action(spark, tmp_path):
     from covid19_etl_pipeline_spark.serving import cached_query
 

@@ -4,15 +4,36 @@ before any query even runs."""
 
 from __future__ import annotations
 
+import json
 import re
 
-from bench import HEADLINE
+from bench import HEADLINE, summarize
 from covid19_etl_pipeline_spark.plans.queries import REGISTRY
 
 
 def test_headline_queries_all_registered():
     missing = [n for n in HEADLINE if n not in REGISTRY]
     assert not missing, missing
+
+
+def test_bench_summary_is_per_query_min_of_passes():
+    """Three passes at the widest 2dp time below 1000s: each query's
+    minimum sits in a different pass, and the printed line still fits
+    a 1750-char tail capture."""
+    passes = [
+        ({n: 999.99 - 0.01 * i if i % 3 == p else 999.99 for i, n in enumerate(HEADLINE)}, 12345.6 + p)
+        for p in range(3)
+    ]
+    doc = summarize(passes, "0.1")
+    mins = {n: round(999.99 - 0.01 * i, 2) for i, n in enumerate(HEADLINE)}
+    assert doc["queries"] == mins
+    assert abs(doc["value"] - sum(mins.values())) < 1e-6
+    assert doc["n"] == len(HEADLINE) and doc["sf"] == 0.1
+    assert doc["passes"] == [
+        {"total": round(sum(t.values()), 3), "steal": s} for t, s in passes
+    ]
+    assert doc["host_cpu_steal_sec"] == 12345.6
+    assert len(json.dumps(doc, separators=(",", ":"))) <= 1750
 
 
 def test_registry_entries_well_formed():
